@@ -90,7 +90,7 @@ def _stage_index_segment(spark: SparkSession, catalog: Catalog, txn,
     dictionary delta (query_term_idf sums deltas per term — exact,
     since batches index disjoint docs), overwrite the one-row stats
     table, and append the segment's index_segments row carrying its
-    built_avgdl.  Query-time bound inflation (make_shard_scorer
+    built_avgdl.  Query-time bound inflation (make_scorer
     bound_scale) keeps the OLDER segments' block-max bounds valid as
     avgdl drifts, so segment-served top-k is rank- and score-identical
     to a full rebuild (tests/test_incremental_segments.py).

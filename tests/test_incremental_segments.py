@@ -7,7 +7,8 @@
    only meet by re-running its whole indexer.
 2. Block-max bounds of older segments were encoded at a smaller avgdl;
    the query-side bound_scale inflation keeps pruning lossless when a
-   batch of long documents drifts avgdl upward (wand == exhaustive).
+   batch of long documents drifts avgdl upward (wand == exhaustive);
+   a query workload carries no bound scales, so it never prunes.
 3. A fault in the torn window leaves index/dictionary/stats/segments
    untouched (the segment staging composes with exactly-once commits).
 """
@@ -15,6 +16,8 @@
 from __future__ import annotations
 
 import datetime as dt
+import importlib.util
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +59,15 @@ def _wand(spark, f, q, k=10):
         f["index"], f["dictionary"], f["docs"], q,
         f["n_docs"], f["avgdl"], k=k,
         bound_scale=f["bound_scale"]).orderBy("rank").collect()]
+
+
+def _service(spark, cat):
+    spec = importlib.util.spec_from_file_location(
+        "submit_query_segments",
+        Path(__file__).resolve().parent.parent / "tools" / "submit_query.py")
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m.QueryService(spark, cat)
 
 
 def _grouped_by_score(rows):
@@ -147,6 +159,25 @@ def test_segmented_wand_matches_exhaustive_under_drift(spark, seg_env):
             f["postings"], f["dictionary"], f["docs"], q,
             f["n_docs"], f["avgdl"], k=10).orderBy("rank").collect()]
         assert got == want, q
+
+
+def test_segmented_batch_matches_exhaustive_under_drift(spark, seg_env):
+    """A one-query workload (the spec count a single query prunes at)
+    through QueryService.run_batch has no segment bound scales, so it
+    decodes in full: every query equals the exhaustive scorer over the
+    drifted catalog, ties included.  This fixture's drift stays within
+    the stale bounds' slack; test_index_wand.py::
+    test_workload_never_prunes_on_stale_bounds has bounds it exceeds."""
+    f = _frames(spark, seg_env["cat"])
+    svc = _service(spark, seg_env["cat"])
+    for q in QUERIES:
+        for k in (1, 10):
+            got = [(r["url"], r["score"]) for r in svc.run_batch(
+                {"q": q}, k, "wand", False).orderBy("rank").collect()]
+            want = [(r["url"], r["score"]) for r in bm25_topk_exhaustive(
+                f["postings"], f["dictionary"], f["docs"], q,
+                f["n_docs"], f["avgdl"], k=k).orderBy("rank").collect()]
+            assert got == want, (q, k)
 
 
 def test_new_docs_surface_in_topk(spark, seg_env):

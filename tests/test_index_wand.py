@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from ir_index_construction_spark.config import BM25Config, small_scale
 from ir_index_construction_spark.functions.codec import decode_chunk
 from ir_index_construction_spark.operators.compress import build_compressed_index
-from ir_index_construction_spark.operators.topk import make_shard_scorer, wand_topk
+from ir_index_construction_spark.operators.topk import (
+    make_batch_shard_scorer, make_scorer, make_shard_scorer, wand_topk)
 from tests.conftest import QUERY_SET
 from tests.oracle import search as oracle_search
 
@@ -191,6 +192,60 @@ def test_pruning_skips_blocks():
     # pruning must have skipped the vast majority of blocks
     assert stats["blocks_total"] == 2 * n / 16
     assert stats["blocks_decoded"] < stats["blocks_total"] * 0.1, stats
+
+    # selection rule: one spec prunes, a workload decodes every block,
+    # and each spec's rows are bit-identical either way (weighted, with
+    # deleted docs)
+    specs = [("or", ["alpha", "beta"], {"alpha": (1, 1.0), "beta": (1, 0.5)},
+              False, 2),
+             ("and", ["beta", "alpha"], {"beta": (2, 0.5), "alpha": (1, 1.0)},
+              True, 2)]
+    kw = dict(weighted=True, exclude_ids={3, 1000})
+    one_stats, two_stats = {}, {}
+    alone = make_scorer(specs[:1], 1, avgdl, BM25Config(), stats=one_stats,
+                        **kw)(pdf)
+    assert one_stats["blocks_decoded"] < 0.1 * one_stats["blocks_total"]
+    both = make_scorer(specs, 1, avgdl, BM25Config(), stats=two_stats,
+                       **kw)(pdf)
+    assert two_stats["blocks_decoded"] == two_stats["blocks_total"] == 2 * n / 16
+    alone += make_scorer(specs[1:], 1, avgdl, BM25Config(), **kw)(pdf)
+    assert [h[0] for h in both] == [h[0] for h in alone] == ["or", "and"]
+    for (_, d2, s2), (_, d1, s1) in zip(both, alone):
+        assert d2.tobytes() == d1.tobytes() and s2.tobytes() == s1.tobytes()
+    assert list(both[0][1]) == [500]
+
+
+def test_workload_never_prunes_on_stale_bounds():
+    """Block-max bounds encoded at a smaller avgdl (an older index
+    segment) sit below the true scores at the current avgdl.  A single
+    query prunes, so it needs the segment's bound_scale; a workload
+    carries none and must decode in full even when it holds one query."""
+    import pandas as pd
+
+    n, built_avgdl, avgdl = 256, 100.0, 1000.0
+    doc_ids = np.arange(n, dtype=np.int64)
+    dls = np.full(n, 1000, np.int64)
+    dls[50] = 100
+    tfs_a = np.ones(n, np.int64)
+    tfs_a[50] = 200                      # alpha's spike sets theta
+    b_ids = doc_ids[doc_ids != 50]
+    tfs_b = np.ones(n - 1, np.int64)
+    tfs_b[b_ids == 200] = 50             # the winner, under a stale bound
+    pdf = pd.concat([
+        _index_rows_for("alpha", doc_ids, tfs_a, dls, built_avgdl),
+        _index_rows_for("beta", b_ids, tfs_b, dls[b_ids], built_avgdl),
+    ])
+    meta, terms = {"alpha": (1, 1.0), "beta": (1, 0.9)}, ["alpha", "beta"]
+    args = (1, False, avgdl, BM25Config())
+    # the fixture bites: unscaled stale bounds cut the winner's block
+    assert list(make_shard_scorer(meta, terms, *args)(pdf)["doc_id"]) == [50]
+    scaled = make_shard_scorer(meta, terms, *args, bound_scale=[
+        (0, 0, avgdl / built_avgdl)])(pdf)
+    assert list(scaled["doc_id"]) == [200]
+    batch = make_batch_shard_scorer([("q", terms, meta, False, 2)], 1, avgdl,
+                                    BM25Config())(pdf)
+    assert list(batch["doc_id"]) == [200]
+    assert batch["score"].iloc[0] == scaled["score"].iloc[0]
 
 
 def test_pruned_scorer_matches_unpruned_on_fixture(built, index_df,
@@ -453,9 +508,11 @@ def test_query_service_applies_tombstones(spark, tmp_path):
 
     cat = Catalog(str(tmp_path / "cat_tomb"))
     txn = cat.transaction()
-    txn.write(spark.createDataFrame(
+    postings = spark.createDataFrame(
         [("foo", 1, 5, 10, 4), ("foo", 2, 2, 10, 4)],
-        "term string, doc_id long, tf int, imp int, dl int"), "postings")
+        "term string, doc_id long, tf int, imp int, dl int")
+    txn.write(postings, "postings")
+    txn.write(build_compressed_index(postings, 4.0), "index")
     txn.write(spark.createDataFrame(
         [(1, "u1", 4), (2, "u2", 4)],
         "doc_id long, url string, doc_len int"), "docs")
@@ -474,6 +531,12 @@ def test_query_service_applies_tombstones(spark, tmp_path):
     assert [(r["rank"], r["doc_id"]) for r in r2] == [(1, 2)]
     # the survivor's score is unchanged by the deletion (same stats)
     assert r2[0]["score"] == r1[1]["score"]
+
+    # the batch route serves the same deletion set
+    b2 = svc.run_batch({"q0": "foo"}, 10, "wand", False).collect()
+    assert [(r["query_id"], r["rank"], r["doc_id"]) for r in b2] == [
+        ("q0", 1, 2)]
+    assert b2[0]["score"] == r1[1]["score"]
 
     assert purge_tombstones(spark, cat) == 1
     r3 = svc.run("foo", 10, "exhaustive", False).orderBy("rank").collect()

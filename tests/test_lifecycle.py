@@ -252,7 +252,7 @@ def test_cli_guards_and_doc_meta_coverage_warning(spark):
 
     assert m._half_life("90") == 90.0
     assert m._half_life("0.5") == 0.5
-    for bad in ("0", "-3", "nan"):
+    for bad in ("0", "-3", "nan", "inf"):
         with pytest.raises(argparse.ArgumentTypeError):
             m._half_life(bad)
 

@@ -81,14 +81,13 @@ def doc_meta_coverage_warning(doc_meta_df, n_docs) -> str | None:
 
 def _half_life(v):
     # a degenerate half-life must error, not ZeroDivisionError in
-    # recency_boosted_topk (0) or silently invert decay into growth,
-    # ranking stale docs UP (negative) — ADVICE r5, mirroring
-    # --collapse's _collapse_cap guard
-    import argparse
+    # recency_boosted_topk (0), silently invert decay into growth,
+    # ranking stale docs UP (negative), or silently switch recency off
+    # (inf) — ADVICE r5, mirroring --collapse's _collapse_cap guard
     fv = float(v)
-    if not fv > 0:                       # also rejects NaN
+    if not (math.isfinite(fv) and fv > 0):      # also rejects NaN
         raise argparse.ArgumentTypeError(
-            f"--recency HALF_LIFE_DAYS must be > 0 (got {v})")
+            f"--recency HALF_LIFE_DAYS must be finite and > 0 (got {v})")
     return fv
 
 
@@ -146,7 +145,7 @@ class QueryService:
             # per-segment block-max bound inflation: a segment encoded
             # at a lower avgdl than today's needs its bounds scaled by
             # avgdl_now/built_avgdl to stay valid upper bounds (see
-            # make_shard_scorer bound_scale)
+            # make_scorer bound_scale)
             self._f["bound_scale"] = None
             if self.cat.table_exists("index_segments"):
                 bs = [(r["min_shard"], r["max_shard"],
@@ -491,6 +490,32 @@ class QueryService:
                                     min_match=min_match,
                                     doc_filter=doc_filter)
 
+    def run_batch(self, queries: dict, k: int, mode: str, weighted: bool):
+        """Evaluate a query workload {query_id: text} in one plan over
+        the current snapshot, tombstoned docs excluded as in run().
+        Mode "phrase" runs phrase_topk_batch (quotes optional), any
+        other mode wand_topk_batch.  Returns (query_id, rank, doc_id,
+        url, score) rows; phrase rows also carry ptf."""
+        f, idf_cache = self._refresh()
+        if mode == "phrase":
+            if "positions" not in f:
+                raise SystemExit(
+                    "phrase queries need a positional index: rebuild the "
+                    "catalog with BuildConfig(positions=True)")
+            from ir_index_construction_spark.plans.query import (
+                phrase_topk_batch)
+
+            return phrase_topk_batch(
+                f["positions"], f["docs"],
+                {qid: q.strip('"') for qid, q in queries.items()},
+                f["n_docs"], f["avgdl"], k=k, exclude_ids=f["exclude_ids"])
+        from ir_index_construction_spark.operators.topk import wand_topk_batch
+
+        return wand_topk_batch(f["index"], f["dictionary"], f["docs"],
+                               queries, f["n_docs"], f["avgdl"], k=k,
+                               weighted=weighted, idf_cache=idf_cache,
+                               exclude_ids=f["exclude_ids"])
+
     def explain(self, query: str, doc_id: int, weighted: bool = False):
         """Per-term BM25 breakdown for one (query, doc) pair — the
         Lucene Explanation analogue (plans/query.explain_score); the
@@ -678,33 +703,14 @@ def main():
     spark = (SparkSession.builder.appName("ir-query")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
              .getOrCreate())
-    cat = Catalog(args.catalog)
+    service = QueryService(spark, Catalog(args.catalog))
 
     if args.batch is not None:
         lines = [l.strip() for l in Path(args.batch).read_text().splitlines()]
         queries = {f"q{i:04d}": q for i, q in enumerate(lines) if q}
-        stats = cat.read(spark, "stats").collect()[0]
         t0 = time.time()
-        if args.mode == "phrase":
-            # whole phrase workload in one plan (plans/query.py
-            # phrase_topk_batch) — quotes in the file are optional
-            from ir_index_construction_spark.plans.query import (
-                phrase_topk_batch)
-
-            rows = phrase_topk_batch(
-                cat.read(spark, "positions"), cat.read(spark, "docs"),
-                {qid: q.strip('"') for qid, q in queries.items()},
-                stats["n_docs"], float(stats["avgdl"]), k=args.k,
-            ).orderBy("query_id", "rank").collect()
-        else:
-            from ir_index_construction_spark.operators.topk import (
-                wand_topk_batch)
-
-            rows = wand_topk_batch(
-                cat.read(spark, "index"), cat.read(spark, "dictionary"),
-                cat.read(spark, "docs"), queries, stats["n_docs"],
-                float(stats["avgdl"]), k=args.k, weighted=args.weighted,
-            ).orderBy("query_id", "rank").collect()
+        rows = service.run_batch(queries, args.k, args.mode, args.weighted) \
+            .orderBy("query_id", "rank").collect()
         elapsed = time.time() - t0
         by_qid: dict = {}
         for r in rows:
@@ -716,10 +722,10 @@ def main():
               f"{elapsed * 1000.0 / max(1, len(queries)):.1f} ms/query]")
         return
 
-    service = QueryService(spark, cat)
-
     order_col = "pmi" if args.mode == "related" else (
         "bucket" if args.date_facet else "rank")
+    order = (F.col(order_col).desc() if order_col == "pmi"
+             else F.col(order_col).asc())
 
     def maybe_suggest(query, rows):
         """searcher-page behavior: a zero-hit term query offers the
@@ -771,20 +777,15 @@ def main():
         synonyms = {k: list(v) for k, v in
                     json.loads(Path(args.synonyms).read_text()).items()}
 
+    kw = dict(zone=args.zone, after=after, collapse=args.collapse,
+              synonyms=synonyms, min_match=args.min_match,
+              scorer=args.scorer, rescore=args.rescore,
+              rescore_weight=args.rescore_weight, meta_filter=meta_filter,
+              date_facet=args.date_facet, recency=args.recency,
+              recency_origin=args.recency_origin)
     if args.query is not None:
-        out = service.run(args.query, args.k, args.mode, args.weighted,
-                          zone=args.zone, after=after,
-                          collapse=args.collapse, synonyms=synonyms,
-                          min_match=args.min_match, scorer=args.scorer,
-                          rescore=args.rescore,
-                          rescore_weight=args.rescore_weight,
-                          meta_filter=meta_filter,
-                          date_facet=args.date_facet,
-                          recency=args.recency,
-                          recency_origin=args.recency_origin)
-        rows = out.orderBy(
-            F.col(order_col).desc() if order_col == "pmi"
-            else F.col(order_col).asc()).collect()
+        rows = service.run(args.query, args.k, args.mode, args.weighted,
+                           **kw).orderBy(order).collect()
         print_results(rows)
         maybe_suggest(args.query, rows)
         return
@@ -801,17 +802,7 @@ def main():
             break
         t0 = time.time()
         rows = service.run(query, args.k, args.mode, args.weighted,
-                           zone=args.zone, after=after,
-                           collapse=args.collapse, synonyms=synonyms,
-                           min_match=args.min_match, scorer=args.scorer,
-                           rescore=args.rescore,
-                           rescore_weight=args.rescore_weight,
-                           meta_filter=meta_filter,
-                           date_facet=args.date_facet,
-                           recency=args.recency,
-                           recency_origin=args.recency_origin) \
-            .orderBy(F.col(order_col).desc() if order_col == "pmi"
-                     else F.col(order_col).asc()).collect()
+                           **kw).orderBy(order).collect()
         elapsed_ms = (time.time() - t0) * 1000.0
         print_results(rows)
         maybe_suggest(query, rows)
