@@ -79,10 +79,14 @@ def clean_corpus(documents: DataFrame) -> DataFrame:
 
 
 class _IdPassHandle:
-    """Owns the id pass's persisted frames; unpersist() frees them all."""
+    """Owns the id pass's persisted frames; unpersist() frees them all.
+    ``n_docs`` is the number of ids the pass assigned (the row count of
+    its with_ids frame), summed from the per-partition counts the pass
+    already collects — so callers need no count job."""
 
-    def __init__(self, *dfs):
+    def __init__(self, *dfs, n_docs: int | None = None):
         self._dfs = [d for d in dfs if d is not None]
+        self.n_docs = n_docs
 
     def unpersist(self, blocking: bool = False):
         for d in self._dfs:
@@ -216,7 +220,7 @@ def dedup_assign_ids(df: DataFrame, sort_cols: list | None = None,
             local += len(pdf)
             yield pdf[out_cols]
 
-    handle = _IdPassHandle(part, df if cache_input else None)
+    handle = _IdPassHandle(part, df if cache_input else None, n_docs=acc)
     return part.mapInPandas(dedup_and_attach, schema=out_schema), handle
 
 
@@ -246,7 +250,9 @@ def dedup_assign_ids_payload(cleaned: DataFrame,
     payload-sorted range pass, whose (url, warc_ts, html) sort order is
     the documented deterministic-survivor contract.  Returns
     (with_ids, handle) with the same schema/column order as the direct
-    call (join keys lead in both layouts)."""
+    call (join keys lead in both layouts); on both paths
+    ``handle.n_docs`` is with_ids' row count (one row per distinct
+    url)."""
     stats: dict = {}
     key_ids, handle = dedup_assign_ids(
         cleaned.select("url", "warc_ts"), ["url", "warc_ts"],

@@ -51,7 +51,7 @@ from pyspark.sql.window import Window
 
 from ..config import BM25Config
 from ..functions.codec import bm25_tf_norm, decode_chunk
-from ..plans.query import empty_topk, query_term_idf
+from ..plans.query import empty_topk, query_term_idf, term_in
 from ..text.normalize import parse_query
 
 _LOCAL_SCHEMA = "doc_id long, score double"
@@ -459,7 +459,7 @@ def wand_topk_batch(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
         return spark.createDataFrame([], "query_id string, rank int, doc_id"
                                          " long, url string, score double")
     needed = sorted({t for _, ordered, *_ in specs for t in ordered})
-    rows = index.filter(F.col("term").isin(needed))
+    rows = index.filter(term_in(needed))
     scorer = make_batch_shard_scorer(specs, k, avgdl, bm25, weighted=weighted,
                                      exclude_ids=exclude_ids)
     local = rows.groupBy("shard").applyInPandas(scorer, _BATCH_LOCAL_SCHEMA)

@@ -95,14 +95,11 @@ class IndexBuilder:
     def _done(self, spark: SparkSession, stage: str) -> set:
         if not self.catalog.table_exists("checkpoints"):
             return set()
-        rows = (
-            self.catalog.read(spark, "checkpoints")
-            .filter((F.col("build_id") == self.build_id)
-                    & (F.col("stage") == stage)
-                    & (F.col("status") == "committed"))
-            .select("partition_id").collect()
-        )
-        return {r["partition_id"] for r in rows}
+        rows = self.catalog.read_rows(
+            "checkpoints", ["build_id", "stage", "partition_id", "status"])
+        return {r["partition_id"] for r in rows
+                if (r["build_id"], r["stage"], r["status"])
+                == (self.build_id, stage, "committed")}
 
     def _commit(self, txn, spark: SparkSession, stage: str, pid: int,
                 rows_in: int, rows_out: int, wall: float,
@@ -135,7 +132,7 @@ class IndexBuilder:
         t0 = time.time()
         rows_in = documents.count()
         with_ids, handle = ingest(documents)
-        n = with_ids.count()
+        n = handle.n_docs          # summed by the id pass: no count job
         batch_span = max(1, -(-n // self.n_batches))   # ceil
         prepared = with_ids.withColumn(
             "batch", (F.col("doc_id") / F.lit(batch_span)).cast("int"))
@@ -240,7 +237,7 @@ class IndexBuilder:
         pending = [tb for tb in range(cfg.term_buckets) if tb not in done]
         if not pending:
             return
-        stats = self.catalog.read(spark, "stats").collect()[0]
+        stats = self.catalog.read_rows("stats")[0]
         avgdl = float(stats["avgdl"]) or 1.0
         postings = self.catalog.read(spark, "postings")
         keyed = _with_keys(postings, cfg).filter(F.col("tb").isin(pending))
@@ -285,7 +282,7 @@ class IndexBuilder:
         if 0 in self._done(spark, "segment"):
             return
         t0 = time.time()
-        stats = self.catalog.read(spark, "stats").collect()[0]
+        stats = self.catalog.read_rows("stats")[0]
         rng = self.catalog.read(spark, "index").agg(
             F.min("shard").alias("lo"), F.max("shard").alias("hi")).collect()[0]
         if rng["lo"] is None:

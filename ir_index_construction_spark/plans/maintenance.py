@@ -126,7 +126,7 @@ def purge_tombstones(spark: SparkSession, catalog: Catalog,
         if has_index:
             from ..operators.compress import build_compressed_index
 
-            stats = catalog.read(spark, "stats").collect()[0]
+            stats = catalog.read_rows("stats")[0]
             avgdl = float(stats["avgdl"]) or 1.0
             txn.write(build_compressed_index(live_p, avgdl, bm25,
                                              index_cfg)
@@ -145,12 +145,12 @@ def purge_tombstones(spark: SparkSession, catalog: Catalog,
         # the crawl-metadata sidecar purges with its docs: erasure
         # removes the victim's timestamps/host too, not just its text
         txn.write(_masked(spark, catalog, "doc_meta"), "doc_meta")
-    txn.write(spark.createDataFrame([], TOMBSTONES), "doc_tombstones")
+    txn.write_rows(spark, "doc_tombstones", [], TOMBSTONES)
     if fault is not None:
         fault()
     txn.commit()
     if has_index and catalog.table_exists("index_segments"):
-        stats = catalog.read(spark, "stats").collect()[0]
+        stats = catalog.read_rows("stats")[0]
         avgdl = float(stats["avgdl"]) or 1.0
         rng = catalog.read(spark, "index").agg(
             F.min("shard").alias("lo"),
@@ -158,10 +158,10 @@ def purge_tombstones(spark: SparkSession, catalog: Catalog,
         if rng["lo"] is not None:
             now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
             txn2 = catalog.transaction()
-            txn2.write(spark.createDataFrame(
-                [("purge", int(rng["lo"]), int(rng["hi"]), avgdl,
-                  int(stats["n_docs"]), now)], INDEX_SEGMENTS),
-                "index_segments")
+            txn2.write_rows(spark, "index_segments",
+                            [("purge", int(rng["lo"]), int(rng["hi"]),
+                              avgdl, int(stats["n_docs"]), now)],
+                            INDEX_SEGMENTS)
             txn2.commit()
     return n
 
@@ -189,9 +189,9 @@ def reindex(spark: SparkSession, catalog: Catalog,
     from ..operators.compress import build_compressed_index
     from ..operators.postings import dictionary_table
 
-    n_segments = (catalog.read(spark, "index_segments").count()
+    n_segments = (len(catalog.read_rows("index_segments", ["segment_id"]))
                   if catalog.table_exists("index_segments") else 0)
-    stats = catalog.read(spark, "stats").collect()[0]
+    stats = catalog.read_rows("stats")[0]
     avgdl = float(stats["avgdl"]) or 1.0
     postings = catalog.read(spark, "postings")
     index = build_compressed_index(postings, avgdl, bm25, index_cfg)
@@ -226,8 +226,8 @@ def reindex(spark: SparkSession, catalog: Catalog,
     import datetime as _dt2
     now = _dt2.datetime.now(_dt2.timezone.utc).replace(tzinfo=None)
     txn2 = catalog.transaction()
-    txn2.write(spark.createDataFrame(
-        [(segment_id, int(rng["lo"]), int(rng["hi"]), avgdl,
-          int(stats["n_docs"]), now)], INDEX_SEGMENTS), "index_segments")
+    txn2.write_rows(spark, "index_segments",
+                    [(segment_id, int(rng["lo"]), int(rng["hi"]), avgdl,
+                      int(stats["n_docs"]), now)], INDEX_SEGMENTS)
     txn2.commit()
     return max(0, n_segments - 1)

@@ -26,6 +26,17 @@ Layout:
 Orphan data files from an uncommitted transaction are unreachable (no
 manifest references them) and harmless — Iceberg's orphan-file cleanup
 is the production analogue.
+
+Driver-sized rows never launch a Spark job.  Ledger rows
+(checkpoints/lineage/metrics, stream commits, index segments,
+tombstones) and one-row tables (stats) already live on the driver, so
+``append_rows``/``write_rows`` write them with pyarrow straight into
+``<table>/data/``, under createDataFrame's contract (same row verifier,
+same ``toInternal`` conversion, Arrow types from ``to_arrow_schema``).
+Small tables are read back the same way: ``read_rows`` returns the
+rows ``read(...).collect()`` would, from the live files of the current
+snapshot.  Spark reads the driver-written files like its own, so a
+table may mix both writers (a build resumed on an older catalog).
 """
 
 from __future__ import annotations
@@ -38,8 +49,12 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (StructType, TimestampType, _create_converter,
+                               _make_type_verifier)
 
 
 # Layout contracts: tables whose scan pruning depends on file-level
@@ -83,6 +98,35 @@ def _write_json_excl(path: str, rec: dict) -> None:
                              "concurrent writer without the commit lock?")
     finally:
         os.unlink(tmp)
+
+
+def _row_schema(schema) -> StructType:
+    """createDataFrame's ``schema`` argument: a StructType or a DDL
+    string such as ``"pid int, status string"``."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"row schema must be a struct, got {schema!r}")
+    return schema
+
+
+def _rows_to_arrow(rows: list, schema: StructType) -> pa.Table:
+    """``rows`` as an Arrow table, converted exactly as
+    ``spark.createDataFrame(rows, schema)`` converts them: every row is
+    verified first (a wrong type or a None in a non-nullable field
+    raises before anything is written), then mapped through
+    ``StructType.toInternal`` — so a naive datetime is read as local
+    time, as createDataFrame reads it — into ``to_arrow_schema`` types
+    (timestamps as ``timestamp[us, UTC]``)."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    convert = _create_converter(schema)
+    internal = [schema.toInternal(convert(row)) for row in rows]
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type)
+         for i, f in enumerate(arrow)], schema=arrow)
 
 
 def _gc_orphan_versions(vdir: str, committed: int | None) -> list[str]:
@@ -139,7 +183,23 @@ class Transaction:
 
     def append_rows(self, spark: SparkSession, table: str, rows: list,
                     schema: StructType) -> "Transaction":
-        return self.append(spark.createDataFrame(rows, schema), table)
+        """Append driver-sized rows, written on the driver (no Spark
+        job); ``schema`` is a StructType or a DDL string, as for
+        ``spark.createDataFrame``."""
+        return self._stage_rows(table, rows, schema, "append")
+
+    def write_rows(self, spark: SparkSession, table: str, rows: list,
+                   schema: StructType) -> "Transaction":
+        """Overwrite twin of ``append_rows`` (one-row tables: stats,
+        a rewritten index_segments)."""
+        return self._stage_rows(table, rows, schema, "overwrite")
+
+    def _stage_rows(self, table: str, rows: list, schema,
+                    mode: str) -> "Transaction":
+        schema = _row_schema(schema)
+        files = self.catalog._write_rows(table, rows, schema)
+        self._pending.append((table, mode, files, schema.json()))
+        return self
 
     def commit(self) -> dict:
         """Publish all staged writes as ONE new catalog version.
@@ -380,6 +440,22 @@ class Catalog:
         shutil.rmtree(staging, ignore_errors=True)
         return final
 
+    def _write_rows(self, table: str, rows: list, schema: StructType) -> list:
+        """Driver-side twin of ``_materialize`` for driver-sized rows:
+        one parquet file written with pyarrow, staged under a temporary
+        name and renamed into ``data/``; no rows, no file.  Returns the
+        relative paths."""
+        data = _rows_to_arrow(rows, schema)
+        if not rows:
+            return []
+        ddir = os.path.join(self._tdir(table), "data")
+        os.makedirs(ddir, exist_ok=True)
+        name = f"{uuid.uuid4().hex}-rows.parquet"
+        staging = os.path.join(ddir, f"stage-{uuid.uuid4().hex}")
+        pq.write_table(data, staging)
+        os.replace(staging, os.path.join(ddir, name))
+        return [os.path.join("data", name)]
+
     def transaction(self) -> Transaction:
         return Transaction(self)
 
@@ -396,7 +472,8 @@ class Catalog:
 
     def append_rows(self, spark: SparkSession, table: str, rows: list,
                     schema: StructType) -> dict:
-        return self.append(spark.createDataFrame(rows, schema), table)
+        self.transaction().append_rows(spark, table, rows, schema).commit()
+        return self.current_snapshot(table)
 
     # ---- read path ----
     def read(self, spark: SparkSession, table: str,
@@ -409,6 +486,32 @@ class Catalog:
             return spark.createDataFrame([], schema)
         paths = [os.path.join(self._tdir(table), f) for f in snap["files"]]
         return spark.read.schema(schema).parquet(*paths)
+
+    def read_rows(self, table: str, columns: list | None = None) -> list:
+        """The rows of a small flat table (ledgers, stats, segments,
+        tombstones) in its current snapshot, read on the driver with
+        pyarrow — no Spark job.  Returns the Rows
+        ``read(...).select(*columns).collect()`` would (Spark's
+        ``fromInternal`` conversion: timestamps come back as naive local
+        datetimes), in file order."""
+        snap = self.current_snapshot(table)
+        if snap is None:
+            raise FileNotFoundError(f"table {table} has no committed snapshot")
+        schema = StructType.fromJson(json.loads(snap["schema"]))
+        if columns is not None:
+            schema = StructType([schema[c] for c in columns])
+        cols: list = [[] for _ in schema.fields]
+        for rel in snap["files"]:
+            data = pq.read_table(os.path.join(self._tdir(table), rel),
+                                 columns=schema.names)
+            for out, field in zip(cols, schema.fields):
+                col = data.column(field.name)
+                if isinstance(field.dataType, TimestampType):
+                    # internal value: epoch microseconds (Spark's own
+                    # files hold INT96 nanoseconds, ours UTC micros)
+                    col = col.cast(pa.timestamp("us")).cast(pa.int64())
+                out.extend(col.to_pylist())
+        return [schema.fromInternal(vals) for vals in zip(*cols)]
 
     def history(self, table: str) -> list:
         sdir = os.path.join(self._tdir(table), "snapshots")

@@ -67,16 +67,11 @@ def _maybe_compact(spark: SparkSession, catalog: Catalog,
                 catalog.compact(spark, table)
 
 
-def _batch_committed(spark: SparkSession, catalog: Catalog,
-                     stream_id: str, batch_id: int) -> bool:
+def _batch_committed(catalog: Catalog, stream_id: str, batch_id: int) -> bool:
     if not catalog.table_exists("stream_commits"):
         return False
-    return (
-        catalog.read(spark, "stream_commits")
-        .filter((F.col("stream_id") == stream_id)
-                & (F.col("batch_id") == batch_id))
-        .limit(1).count() > 0
-    )
+    return (stream_id, batch_id) in catalog.read_rows(
+        "stream_commits", ["stream_id", "batch_id"])
 
 
 def _stage_index_segment(spark: SparkSession, catalog: Catalog, txn,
@@ -102,8 +97,8 @@ def _stage_index_segment(spark: SparkSession, catalog: Catalog, txn,
     per catalog, which the (stream_id, batch_id) ledger already
     implies."""
     if catalog.table_exists("index_segments"):
-        segs = catalog.read(spark, "index_segments")
-        next_shard = int(segs.agg(F.max("max_shard")).collect()[0][0]) + 1
+        next_shard = max(r["max_shard"] for r in catalog.read_rows(
+            "index_segments", ["max_shard"])) + 1
     else:
         next_shard = 0                          # cold start, no base build
 
@@ -130,7 +125,7 @@ def _stage_index_segment(spark: SparkSession, catalog: Catalog, txn,
     new_terms = delta.select("term")
     old_n_docs, old_n_terms = 0, 0
     if catalog.table_exists("stats"):
-        old_stats = catalog.read(spark, "stats").collect()[0]
+        old_stats = catalog.read_rows("stats")[0]
         old_n_docs = int(old_stats["n_docs"])
         old_n_terms = int(old_stats["n_terms"])
     if catalog.table_exists("dictionary"):
@@ -178,9 +173,9 @@ def _stage_index_segment(spark: SparkSession, catalog: Catalog, txn,
         txn.append(reversed_dictionary(delta).coalesce(
             max(1, spark.sparkContext.defaultParallelism // 8))
             .sortWithinPartitions("rterm"), "rdictionary")
-    txn.write(spark.createDataFrame(
-        [(n_docs, avgdl, old_n_terms + n_new_terms)],
-        "n_docs long, avgdl double, n_terms long"), "stats")
+    txn.write_rows(spark, "stats",
+                   [(n_docs, avgdl, old_n_terms + n_new_terms)],
+                   "n_docs long, avgdl double, n_terms long")
     delta.unpersist()
     max_shard = next_shard + max(0, (n_new - 1) // index_cfg.shard_size)
     now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
@@ -211,7 +206,7 @@ def process_stream_batch(spark: SparkSession, catalog: Catalog,
     batch, atomically with postings/docs, so phrase queries never
     silently miss streamed docs; True forces it (streaming-only
     positional cold start), False opts out."""
-    if _batch_committed(spark, catalog, stream_id, batch_id):
+    if _batch_committed(catalog, stream_id, batch_id):
         return                                  # replayed batch: no-op
     if maintain_positions is None:
         maintain_positions = catalog.table_exists("positions")

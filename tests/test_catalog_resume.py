@@ -466,3 +466,249 @@ def test_compact_preserves_sorted_layout(spark, tmp_path):
         assert hi <= lo                     # files cover disjoint ranges
     assert sorted((r["term"], r["df"]) for r in
                   cat.read(spark, "dictionary").collect()) == rows_before
+
+
+# ---- driver-side ledger rows (append_rows / write_rows / read_rows) ----
+
+def _ledger_cases():
+    import datetime as dt
+
+    from ir_index_construction_spark.schemas import (
+        CHECKPOINTS, INDEX_SEGMENTS, LINEAGE, METRICS, STREAM_COMMITS,
+        TOMBSTONES)
+
+    naive = dt.datetime(2024, 3, 10, 6, 30, 15, 123456)
+    aware = dt.datetime(2023, 11, 5, 1, 30, tzinfo=dt.timezone.utc)
+    return [
+        ("checkpoints", CHECKPOINTS,
+         [("b0", "tokenize", 3, "committed", naive),
+          ("b0", "encode", 0, "committed", aware)]),
+        ("lineage", LINEAGE, [("b0", "prepare", 0, "input", 600, 575)]),
+        ("metrics", METRICS,
+         [("b0", "encode", 1, 0.25, 2300.5, 1e6 / 3, 12345)]),
+        ("index_segments", INDEX_SEGMENTS,
+         [("seg-1", 0, 3, 123.456789, 575, naive)]),
+        ("stream_commits", STREAM_COMMITS, [("s", 1 << 40, 400, naive)]),
+        ("doc_tombstones", TOMBSTONES,
+         [(7, "http://a.example/x", naive, None),
+          (9, "http://b.example/y", aware, "takedown")]),
+        ("ddl", "pid int, status string, at timestamp, score double",
+         [(1, None, naive, None), (2, "ok", None, 0.5)]),
+    ]
+
+
+def test_append_rows_round_trip_equals_create_dataframe(spark, tmp_path,
+                                                        monkeypatch):
+    """Rows written on the driver read back (through Spark and through
+    read_rows) exactly as the rows createDataFrame makes, with the same
+    manifest schema.  Run under a non-UTC local zone: createDataFrame
+    reads a naive datetime as LOCAL time, so a writer that stored it as
+    UTC would read back shifted by the zone offset."""
+    import time as _time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    _time.tzset()
+    try:
+        cat = Catalog(str(tmp_path / "cat_rows"))
+        txn = cat.transaction()
+        for table, schema, rows in _ledger_cases():
+            txn.append_rows(spark, table, rows, schema)
+        txn.commit()
+        for table, schema, rows in _ledger_cases():
+            ref = spark.createDataFrame(rows, schema)
+            assert cat.current_snapshot(table)["schema"] \
+                == ref.schema.json(), table
+            want = sorted(ref.collect(), key=repr)
+            assert sorted(cat.read(spark, table).collect(), key=repr) \
+                == want, table
+            assert sorted(cat.read_rows(table), key=repr) == want, table
+    finally:
+        monkeypatch.undo()
+        _time.tzset()
+
+
+def test_append_rows_verifies_before_staging(spark, tmp_path):
+    """createDataFrame's verifier runs before anything is written: a
+    wrong type or a None in a non-nullable field raises and stages no
+    file."""
+    import datetime as dt
+    import os
+
+    from ir_index_construction_spark.schemas import CHECKPOINTS
+
+    cat = Catalog(str(tmp_path / "cat_verify"))
+    now = dt.datetime(2024, 1, 1)
+    bad = [
+        [("b0", "prepare", "zero", "committed", now)],   # str in an int
+        [("b0", None, 0, "committed", now)],            # None, non-null
+        [("b0", "prepare", 0, "committed", "2024-01-01")],  # str in a ts
+    ]
+    for rows in bad:
+        with pytest.raises((TypeError, ValueError)):
+            cat.transaction().append_rows(spark, "checkpoints", rows,
+                                          CHECKPOINTS)
+    ddir = os.path.join(cat._tdir("checkpoints"), "data")
+    assert not os.path.isdir(ddir) or os.listdir(ddir) == []
+    assert not cat.table_exists("checkpoints")
+
+
+def test_mixed_spark_and_driver_written_files(spark, tmp_path):
+    """A ledger holding a Spark-written file (a catalog built before
+    ledger rows were written on the driver) and a driver-written file
+    reads correctly through both Catalog.read and read_rows."""
+    import datetime as dt
+
+    from ir_index_construction_spark.schemas import CHECKPOINTS
+
+    cat = Catalog(str(tmp_path / "cat_mixed"))
+    old = [("b0", "prepare", 0, "committed",
+            dt.datetime(2024, 1, 1, 12, 0, 0, 1))]
+    new = [("b0", "tokenize", 0, "committed",
+            dt.datetime(2024, 1, 1, 12, 5, 0, 999999)),
+           ("b0", "tokenize", 1, "committed",
+            dt.datetime(2024, 1, 1, 12, 6))]
+    cat.append(spark.createDataFrame(old, CHECKPOINTS), "checkpoints")
+    cat.append_rows(spark, "checkpoints", new, CHECKPOINTS)
+    files = cat.current_snapshot("checkpoints")["files"]
+    assert any(f.endswith("-rows.parquet") for f in files)
+    assert any(not f.endswith("-rows.parquet") for f in files)
+    want = sorted(spark.createDataFrame(old + new, CHECKPOINTS).collect())
+    assert sorted(cat.read(spark, "checkpoints").collect()) == want
+    assert sorted(cat.read_rows("checkpoints")) == want
+    assert sorted(cat.read_rows("checkpoints", ["stage", "partition_id"])) \
+        == sorted((r["stage"], r["partition_id"]) for r in want)
+    assert IndexBuilder(cat, CFG, build_id="b0")._done(spark, "tokenize") \
+        == {0, 1}
+
+
+def test_driver_rows_launch_no_spark_job(spark, tmp_path):
+    """append_rows, write_rows, read_rows and IndexBuilder._done run no
+    Spark job (counted per job group); the Spark-written append they
+    replace does, which shows the count bites."""
+    import datetime as dt
+
+    from ir_index_construction_spark.schemas import CHECKPOINTS
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cat = Catalog(str(tmp_path / "cat_jobs"))
+    row = [("b0", "prepare", 0, "committed", dt.datetime(2024, 1, 1))]
+    try:
+        sc.setJobGroup("spark-written-rows", "control")
+        cat.append(spark.createDataFrame(row, CHECKPOINTS), "checkpoints")
+        assert tracker.getJobIdsForGroup("spark-written-rows")
+
+        sc.setJobGroup("driver-rows", "ledger rows on the driver")
+        txn = cat.transaction()
+        txn.append_rows(spark, "checkpoints", row, CHECKPOINTS)
+        txn.write_rows(spark, "stats", [(10, 2.5, 7)],
+                       "n_docs long, avgdl double, n_terms long")
+        txn.commit()
+        assert len(cat.read_rows("checkpoints")) == 2
+        assert cat.read_rows("stats")[0]["n_terms"] == 7
+        assert IndexBuilder(cat, CFG, build_id="b0")._done(
+            spark, "prepare") == {0}
+        assert tracker.getJobIdsForGroup("driver-rows") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_write_rows_overwrites(spark, tmp_path):
+    """write_rows replaces the table's rows (the one-row stats and
+    index_segments rewrites); an empty rewrite leaves an empty table."""
+    from ir_index_construction_spark.schemas import TOMBSTONES
+
+    cat = Catalog(str(tmp_path / "cat_over"))
+    ddl = "n_docs long, avgdl double, n_terms long"
+    cat.transaction().write_rows(spark, "stats", [(1, 1.0, 1)], ddl).commit()
+    cat.transaction().write_rows(spark, "stats", [(5, 2.5, 9)], ddl).commit()
+    assert [tuple(r) for r in cat.read(spark, "stats").collect()] \
+        == [(5, 2.5, 9)]
+    assert [tuple(r) for r in cat.read_rows("stats")] == [(5, 2.5, 9)]
+    cat.transaction().write_rows(spark, "doc_tombstones", [],
+                                 TOMBSTONES).commit()
+    assert cat.read(spark, "doc_tombstones").count() == 0
+    assert cat.read_rows("doc_tombstones") == []
+
+
+def test_segmented_idf_lookup_equals_join_and_sum(spark, tmp_path):
+    """query_term_idf over a two-segment dictionary (two delta rows per
+    term) returns the values of the former broadcast-join + Spark sum,
+    bit for bit, with and without a cache."""
+    import math
+
+    from ir_index_construction_spark.plans.query import query_term_idf
+
+    cat = Catalog(str(tmp_path / "cat_idf"))
+    seg1 = [("machin", 3, 5), ("learn", 40, 90), ("softwar", 1, 1)]
+    seg2 = [("machin", 11, 14), ("learn", 2, 2), ("engin", 7, 9)]
+    for seg in (seg1, seg2):
+        cat.append(spark.createDataFrame(seg, "term string, df long, "
+                                              "cf long"), "dictionary")
+    dictionary = cat.read(spark, "dictionary")
+    n_docs = 97
+    terms = ["machin", "learn", "softwar", "engin", "absent"]
+    summed = (dictionary.join(F.broadcast(spark.createDataFrame(
+        [(t,) for t in terms], "term string")), "term", "inner")
+        .groupBy("term").agg(F.sum("df").alias("df")).collect())
+    want = {r["term"]: (r["df"], math.log(
+        (n_docs - r["df"] + 0.5) / (r["df"] + 0.5) + 1.0)) for r in summed}
+    assert want["machin"][0] == 14 and "absent" not in want
+    assert query_term_idf(spark, dictionary, terms, n_docs) == want
+    cache: dict = {}
+    assert query_term_idf(spark, dictionary, terms, n_docs,
+                          cache=cache) == want
+    assert cache["absent"] is None
+    assert query_term_idf(spark, dictionary, ["learn"], n_docs,
+                          cache=cache) == {"learn": want["learn"]}
+
+
+def test_term_in_matches_isin(spark, tmp_path):
+    """term_in (the IN list sent as one SQL expression) selects the rows
+    Column.isin selects, for terms that need escaping too, and is pushed
+    into the parquet scan as In(term, ...)."""
+    from ir_index_construction_spark.plans.query import term_in
+
+    terms = ["machin", "o'neil", "a\\b", "\\'", "x\\u0041", "ü", "",
+             "two words", "mult'i'ple"]
+    path = str(tmp_path / "terms")
+    spark.createDataFrame([(t, i) for i, t in enumerate(terms + ["other"])],
+                          "term string, n long").write.parquet(path)
+    frame = spark.read.parquet(path)
+    for wanted in (terms, terms[:3], ["absent"], []):
+        got = sorted(r["n"] for r in frame.filter(term_in(wanted)).collect())
+        want = sorted(r["n"] for r in
+                      frame.filter(F.col("term").isin(wanted)).collect())
+        assert got == want
+    assert len(frame.filter(term_in(terms)).collect()) == len(terms)
+
+    def pushed(cond):
+        plan = frame.filter(cond)._jdf.queryExecution() \
+            .executedPlan().toString()
+        return plan.split("PushedFilters: ")[1].split("]")[0]
+
+    assert pushed(term_in(terms[:3])).startswith("[In(term, ")
+    assert pushed(term_in(terms[:3])) == pushed(F.col("term").isin(terms[:3]))
+
+
+def test_id_pass_carries_doc_count(spark, corpus_rows):
+    """The id pass's handle carries with_ids' row count on the clean
+    path and on the dirty (duplicate url+warc_ts) fallback, so the
+    builder's prepare stage needs no count job."""
+    from ir_index_construction_spark.operators.corpus import ingest
+    from ir_index_construction_spark.schemas import DOCUMENTS
+
+    from ir_index_construction_spark.text.normalize import (defrag_url,
+                                                            is_valid_url)
+
+    rows = [dict(r) for r in corpus_rows[:40]]
+    kept = [r for r in rows if is_valid_url(defrag_url(r["url"]))]
+    dirty = dict(kept[0])
+    dirty["html"] = kept[1]["html"]           # same key, different content
+    for data in (rows, rows + [dirty]):
+        with_ids, handle = ingest(spark.createDataFrame(data, DOCUMENTS))
+        try:
+            assert handle.n_docs == with_ids.count() > 0
+        finally:
+            handle.unpersist()

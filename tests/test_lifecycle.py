@@ -256,12 +256,19 @@ def test_cli_guards_and_doc_meta_coverage_warning(spark):
         with pytest.raises(argparse.ArgumentTypeError):
             m._half_life(bad)
 
-    meta = spark.createDataFrame(
-        [(0,), (1,), (2,)], "doc_id long")
-    assert m.doc_meta_coverage_warning(meta, 3) is None
-    warn = m.doc_meta_coverage_warning(meta, 5)
+    def ids(*xs):
+        return spark.createDataFrame([(x,) for x in xs], "doc_id long")
+
+    meta = ids(0, 1, 2)
+    assert m.doc_meta_coverage_warning(meta, ids(0, 1, 2), 3) is None
+    warn = m.doc_meta_coverage_warning(meta, ids(0, 1, 2, 3, 4), 5)
     assert warn and "3 of 5" in warn
     # duplicate sidecar rows must not mask a gap (distinct doc_ids)
-    dup = spark.createDataFrame(
-        [(0,), (0,), (1,), (1,), (2,), (2,)], "doc_id long")
-    assert "3 of 5" in m.doc_meta_coverage_warning(dup, 5)
+    dup = ids(0, 0, 1, 1, 2, 2)
+    assert "3 of 5" in m.doc_meta_coverage_warning(
+        dup, ids(0, 1, 2, 3, 4), 5)
+    # nor may an orphan meta row (no such doc) mask a missing one:
+    # doc 2 has no metadata, doc 99 is not a doc
+    orphan = ids(0, 1, 99)
+    warn = m.doc_meta_coverage_warning(orphan, ids(0, 1, 2), 3)
+    assert warn and "2 of 3" in warn

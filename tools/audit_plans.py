@@ -726,6 +726,7 @@ def main():
     # properties must hold when the index is a union of per-batch
     # segments and the dictionary holds per-segment delta rows
     from ir_index_construction_spark.corpusgen import make_doc
+    from ir_index_construction_spark.plans.query import idf_lookup_frame
     from ir_index_construction_spark.schemas import DOCUMENTS as _DOCS
     from ir_index_construction_spark.sources.catalog import Catalog as _Cat
     from ir_index_construction_spark.streaming import (
@@ -738,10 +739,10 @@ def main():
                               _DOCS).write.parquet(f"{sroot}/in/{fn}")
         _inc(spark, scat, sroot + "/in/*", sroot + "/ck",
              maintain_index=True, index_cfg=cfg.index)
-    sstats = scat.read(spark, "stats").collect()[0]
+    sstats = scat.read_rows("stats")[0]
     sscale = [(r["min_shard"], r["max_shard"],
                max(1.0, float(sstats["avgdl"]) / r["built_avgdl"]))
-              for r in scat.read(spark, "index_segments").collect()]
+              for r in scat.read_rows("index_segments")]
     section(
         "WAND over an incrementally-maintained SEGMENTED index",
         wand_topk(scat.read(spark, "index"),
@@ -759,17 +760,18 @@ def main():
         ],
     )
 
+    # the frame query_term_idf collects (its delta rows are summed per
+    # term on the driver); two terms, because the optimizer rewrites a
+    # one-element IN list to an equality
     section(
-        "segment dictionary-delta idf lookup (sum per term, broadcast)",
-        scat.read(spark, "dictionary")
-        .join(F.broadcast(spark.createDataFrame([("machin",)],
-                                                "term string")), "term")
-        .groupBy("term").agg(F.sum("df").alias("df")),
+        "segment dictionary-delta idf lookup (one pushed-down scan)",
+        idf_lookup_frame(scat.read(spark, "dictionary"),
+                         ["machin", "learn"]),
         [
-            ("delta rows aggregated with a partial agg before shuffle",
-             lambda p: "HashAggregate" in p and "partial" in p.lower()),
-            ("lookup terms broadcast, dictionary never shuffled pre-join",
-             lambda p: "BroadcastHashJoin" in p),
+            ("lookup terms pushed into the dictionary scan as In(term)",
+             lambda p: "PushedFilters" in p and "In(term" in p),
+            ("no Exchange: the lookup is one scan, nothing shuffled",
+             lambda p: "Exchange" not in p),
         ],
     )
 

@@ -61,7 +61,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def doc_meta_coverage_warning(doc_meta_df, n_docs) -> str | None:
+def doc_meta_coverage_warning(doc_meta_df, docs_df, n_docs) -> str | None:
     """Coverage check for the crawl-metadata sidecar (ADVICE r5): a
     legacy catalog can hold doc_meta rows for only a subset of docs
     (batch-built before the sidecar existed, then extended by streaming
@@ -69,8 +69,12 @@ def doc_meta_coverage_warning(doc_meta_df, n_docs) -> str | None:
     every metadata-less doc silently vanishes from --filter /
     --facet-date / --recency results while plain queries still return
     it.  One cheap count per snapshot refresh makes that gap loud.
-    Returns the warning text, or None when coverage is complete."""
-    n_meta = doc_meta_df.select("doc_id").distinct().count()
+    Only doc_meta ids that are in ``docs_df`` count (a semi-join), so
+    orphan meta rows cannot mask missing ones.  Returns the warning
+    text, or None when coverage is complete."""
+    n_meta = (doc_meta_df.select("doc_id").distinct()
+              .join(docs_df.select("doc_id"), "doc_id", "left_semi")
+              .count())
     if n_meta >= n_docs:
         return None
     return (f"WARNING: doc_meta covers only {n_meta} of {n_docs} docs; "
@@ -117,7 +121,7 @@ class QueryService:
         cid = cur["catalog_id"] if cur else None
         if cid != self._catalog_id:
             self._catalog_id = cid
-            stats = self.cat.read(self.spark, "stats").collect()[0]
+            stats = self.cat.read_rows("stats")[0]
             self._f = {
                 "n_docs": stats["n_docs"],
                 "avgdl": float(stats["avgdl"]),
@@ -136,6 +140,7 @@ class QueryService:
                     self._f[t] = self.cat.read(self.spark, t)
             if "doc_meta" in self._f:
                 warn = doc_meta_coverage_warning(self._f["doc_meta"],
+                                                 self._f["docs"],
                                                  self._f["n_docs"])
                 if warn:
                     print(warn, file=sys.stderr)
@@ -150,15 +155,14 @@ class QueryService:
             if self.cat.table_exists("index_segments"):
                 bs = [(r["min_shard"], r["max_shard"],
                        max(1.0, self._f["avgdl"] / r["built_avgdl"]))
-                      for r in self.cat.read(self.spark, "index_segments")
-                      .collect() if r["built_avgdl"] > 0]
+                      for r in self.cat.read_rows("index_segments")
+                      if r["built_avgdl"] > 0]
                 self._f["bound_scale"] = bs or None
             self._f["exclude_ids"] = None
             if self.cat.table_exists("doc_tombstones"):
                 ids = frozenset(
                     r["doc_id"] for r in
-                    self.cat.read(self.spark, "doc_tombstones")
-                    .select("doc_id").collect())
+                    self.cat.read_rows("doc_tombstones", ["doc_id"]))
                 self._f["exclude_ids"] = ids or None
         return self._f, self._tsc.for_snapshot(cid)
 
