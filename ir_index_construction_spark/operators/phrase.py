@@ -17,7 +17,7 @@ Two tiers, same pattern as BM25 (plans/query.py):
     and maintained per micro-batch by the streaming path).
 
 Plan shape (the part that must hold at 100 TB): the positions scan is
-filtered to the phrase's terms with a static ``isin`` (pushed to
+filtered to the phrase's terms with a static IN list (pushed to
 parquet row-group stats on the term-sorted layout — identical to the
 postings pruning in plans/query.py:154), then ONE hash aggregation
 keyed on doc_id builds per-offset position arrays; phrase starts are
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..config import BM25Config
+from ..plans.query import doc_id_frame, term_in
 
 
 def token_positions(docs: DataFrame, text_col: str = "text",
@@ -77,7 +78,7 @@ def _offset_arrays(positions: DataFrame, terms: list,
             shifted = F.when(F.col("term") == t, F.col(pos_col) - F.lit(i))
             aggs.append(F.collect_list(shifted).alias(f"_p{i}"))
     return (
-        positions.filter(F.col("term").isin(list(set(terms))))
+        positions.filter(term_in(sorted(set(terms))))
         .groupBy("doc_id").agg(*aggs)
     )
 
@@ -160,7 +161,7 @@ def phrase_match_batch(positions: DataFrame, phrases: dict,
         [(qid, len(terms)) for qid, terms in phrases.items()],
         "query_id string, m int"))
     all_terms = sorted({t for _, t, _ in qmap})
-    j = positions.filter(F.col("term").isin(all_terms)).join(qmap_df, "term")
+    j = positions.filter(term_in(all_terms)).join(qmap_df, "term")
     if plural:
         j = j.select("query_id", "doc_id", "offset",
                      F.explode(pos_col).alias("p"))
@@ -207,9 +208,8 @@ def snippet_windows(positions: DataFrame, doc_ids, terms: list,
     if isinstance(doc_ids, DataFrame):
         ids = F.broadcast(doc_ids.select("doc_id"))
     else:
-        ids = F.broadcast(spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id long"))
-    p = positions.filter(F.col("term").isin(list(set(terms)))).join(
+        ids = F.broadcast(doc_id_frame(spark, doc_ids))
+    p = positions.filter(term_in(sorted(set(terms)))).join(
         ids, "doc_id", "left_semi")
     if plural:
         allp = F.array_sort(F.flatten(F.collect_list(F.col(pos_col))))

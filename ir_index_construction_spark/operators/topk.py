@@ -35,9 +35,22 @@ lossless given valid bounds, so the rule changes cost, never results;
 a workload also carries no segment bound scales, so it must not prune
 even when it holds one query.
 
+Term cursors are columnar (_shard_cursors): one stable (term, chunk)
+sort of the shard's columns concatenates every chunk's block_last_doc
+and block-max arrays once, and each term's cursor holds views of its
+contiguous range (block_last, block_ub, block_prev = the previous
+block's last doc, or first_doc - 1 at a term's first block) plus its
+chunks' payloads.  No per-term pandas group, sort or row tuples, which
+cost ~1 ms per term; decode and arithmetic are unchanged, so scores
+are too.
+
 Boolean AND: no pruning (a seed theta over non-candidates could
 over-prune); candidates must match all distinct terms, and a term with
 zero global postings empties the result before any job launches.
+
+wand_topk_driver runs the same scorer on the driver, with no Spark
+job, for queries whose postings fit a budget (the query service's
+route for small queries).
 """
 
 from __future__ import annotations
@@ -46,12 +59,15 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..config import BM25Config
 from ..functions.codec import bm25_tf_norm, decode_chunk
 from ..plans.query import empty_topk, query_term_idf, term_in
+from ..schemas import TOPK
 from ..text.normalize import parse_query
 
 _LOCAL_SCHEMA = "doc_id long, score double"
@@ -83,52 +99,81 @@ def _sparse_table(values: np.ndarray):
 
 
 class _TermCursor:
-    """All chunks of one term within one shard, with flat block tables.
-    block_ub holds the stored (unweighted) block-max tf-norm bounds."""
+    """All chunks of one term within one shard: views into the shard's
+    block tables (_shard_cursors).  block_ub holds the stored
+    (unweighted or weighted) block-max tf-norm bounds."""
 
-    __slots__ = ("rows", "block_last", "block_ub", "block_prev",
-                 "chunk_block_ranges", "n_postings")
+    __slots__ = ("payloads", "chunk_lasts", "block_last", "block_ub",
+                 "block_prev", "chunk_offsets", "n_postings")
 
-    def __init__(self, g: pd.DataFrame, weighted: bool = False):
-        g = g.sort_values("chunk")
-        self.rows = list(g.itertuples(index=False))
-        lasts, ubs, ranges = [], [], []
-        off = 0
-        for r in self.rows:
-            bl = np.asarray(r.block_last_doc, np.int64)
-            lasts.append(bl)
-            bm = r.block_max_wscore if weighted else r.block_max_score
-            ubs.append(np.asarray(bm, np.float64))
-            ranges.append((off, off + len(bl)))
-            off += len(bl)
-        self.block_last = np.concatenate(lasts)
-        self.block_ub = np.concatenate(ubs)
-        prev = np.empty_like(self.block_last)
-        prev[0] = self.rows[0].first_doc - 1
-        prev[1:] = self.block_last[:-1]
-        self.block_prev = prev
-        self.chunk_block_ranges = ranges
-        self.n_postings = int(sum(r.n_postings for r in self.rows))
+    def __init__(self, payloads, chunk_lasts, block_last, block_ub,
+                 block_prev, chunk_offsets, n_postings: int):
+        self.payloads = payloads            # per chunk, in chunk order
+        self.chunk_lasts = chunk_lasts      # per chunk block_last_doc
+        self.block_last = block_last
+        self.block_ub = block_ub
+        self.block_prev = block_prev
+        self.chunk_offsets = chunk_offsets  # chunk i: blocks [o[i], o[i+1])
+        self.n_postings = n_postings
 
     def decode(self, sel: np.ndarray | None, with_imp: bool = False):
         """Decode selected blocks (None = all) across chunks.  with_imp
         skips the imp stream entirely for plain-BM25 queries."""
         docs, tfs, dls, imps = [], [], [], []
-        for r, (b0, b1) in zip(self.rows, self.chunk_block_ranges):
-            csel = None if sel is None else sel[b0:b1]
+        o = self.chunk_offsets
+        for i, (payload, lasts) in enumerate(zip(self.payloads,
+                                                 self.chunk_lasts)):
+            csel = None if sel is None else sel[o[i]:o[i + 1]]
             if csel is not None and not csel.any():
                 continue
-            d, t, l, i = decode_chunk(r.payload, r.block_last_doc, csel,
-                                      with_imp=with_imp)
+            d, t, l, im = decode_chunk(payload, lasts, csel,
+                                       with_imp=with_imp)
             docs.append(d)
             tfs.append(t)
             dls.append(l)
-            imps.append(i)
+            imps.append(im)
         if not docs:
             z = np.zeros(0, np.int64)
             return z, z, z, z
         return (np.concatenate(docs), np.concatenate(tfs),
                 np.concatenate(dls), np.concatenate(imps))
+
+
+def _shard_cursors(pdf: pd.DataFrame, weighted: bool = False) -> dict:
+    """{term: _TermCursor} over one shard's index rows, built from ONE
+    stable (term, chunk) sort of the columns and array slices: the
+    shard's block tables are concatenated once, and each term's cursor
+    holds views of its contiguous range (no per-term frame, sort or
+    row objects)."""
+    codes, terms = pd.factorize(pdf["term"])
+    order = np.lexsort((pdf["chunk"].to_numpy(), codes))
+    codes = codes[order]
+    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
+    bounds = np.r_[starts, len(codes)]
+    lasts = [np.asarray(v, np.int64)
+             for v in pdf["block_last_doc"].to_numpy()[order]]
+    ub_col = "block_max_wscore" if weighted else "block_max_score"
+    block_last = np.concatenate(lasts)
+    block_ub = np.concatenate(
+        [np.asarray(v, np.float64) for v in pdf[ub_col].to_numpy()[order]])
+    off = np.zeros(len(lasts) + 1, np.int64)
+    np.cumsum([len(v) for v in lasts], out=off[1:])
+    # a block's doc range is (prev_block_last, block_last]; a term's
+    # first block starts after its first chunk's first_doc - 1
+    block_prev = np.empty_like(block_last)
+    block_prev[1:] = block_last[:-1]
+    block_prev[off[starts]] = pdf["first_doc"].to_numpy(np.int64)[order][
+        starts] - 1
+    n_postings = np.add.reduceat(
+        pdf["n_postings"].to_numpy(np.int64)[order], starts)
+    payloads = pdf["payload"].to_numpy()[order]
+    cursors = {}
+    for j, (s, e) in enumerate(zip(bounds[:-1], bounds[1:])):
+        b0, b1 = off[s], off[e]
+        cursors[terms[codes[s]]] = _TermCursor(
+            payloads[s:e], lasts[s:e], block_last[b0:b1], block_ub[b0:b1],
+            block_prev[b0:b1], off[s:e + 1] - b0, int(n_postings[j]))
+    return cursors
 
 
 def make_scorer(specs: list, k: int, avgdl: float, bm25: BM25Config,
@@ -236,8 +281,7 @@ def _scorer(specs, k, avgdl, bm25, weighted, exclude_ids, bound_scale,
         return keep
 
     def score_shard(pdf: pd.DataFrame) -> list:
-        cursors = {term: _TermCursor(g, weighted)
-                   for term, g in pdf.groupby("term", sort=False)}
+        cursors = _shard_cursors(pdf, weighted)
         active = []
         for qid, ordered, meta, is_bool, n_required in specs:
             present = [t for t in ordered if t in cursors]
@@ -308,19 +352,25 @@ def make_shard_scorer(term_meta: dict, ordered_terms: list, k: int,
     return score_shard
 
 
-def _query_specs(spark, dictionary: DataFrame, parsed: dict, n_docs: int,
+def _query_specs(spark, dictionary, parsed: dict, n_docs: int,
                  avgdl: float, idf_cache: dict | None = None,
                  boosts: dict | None = None) -> list:
     """make_scorer specs for {query_id: (terms, is_bool)}: one idf
-    lookup job for the union of the terms, then per query its distinct
-    terms in query order with {term: (multiplicity, idf x boost)}.
-    Queries with an empty result are left out: no known term, or a
-    boolean query missing any term (searcher.py:153-155); so is every
-    query of an empty corpus, before any job launches."""
+    lookup for the union of the terms (query_term_idf: a Spark job over
+    a dictionary frame, none over a pyarrow dataset), then _specs.  An
+    empty corpus has no specs, and makes no lookup."""
     union = sorted({t for terms, _ in parsed.values() for t in terms})
     if not union or n_docs == 0 or avgdl == 0:
         return []
     tf_idf = query_term_idf(spark, dictionary, union, n_docs, cache=idf_cache)
+    return _specs(parsed, tf_idf, boosts)
+
+
+def _specs(parsed: dict, tf_idf: dict, boosts: dict | None = None) -> list:
+    """Per query its distinct terms in query order with {term:
+    (multiplicity, idf x boost)}, from the {term: (df, idf)} lookup.
+    Queries with an empty result are left out: no known term, or a
+    boolean query missing any term (searcher.py:153-155)."""
     specs = []
     for qid, (terms, is_bool) in parsed.items():
         counts = Counter(terms)
@@ -383,7 +433,7 @@ def wand_topk(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
     if not specs:
         return empty_topk(spark)
     _, ordered, term_meta, is_bool, _ = specs[0]
-    rows = index.filter(F.col("term").isin(ordered))
+    rows = index.filter(term_in(ordered))
     scorer = make_shard_scorer(term_meta, ordered, k, is_bool, avgdl, bm25,
                                weighted=weighted, exclude_ids=exclude_ids,
                                bound_scale=bound_scale, after=after)
@@ -396,6 +446,83 @@ def wand_topk(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
         ).cast("int"))
         .select("rank", "doc_id", "url", "score")
     )
+
+
+class DriverIndex:
+    """pyarrow datasets over ONE catalog snapshot's live index,
+    dictionary and docs files: what wand_topk_driver reads.  Open it
+    once per snapshot; files are immutable, so a later commit never
+    changes what it reads."""
+
+    __slots__ = ("index", "dictionary", "docs")
+
+    def __init__(self, files: dict):
+        self.index, self.dictionary, self.docs = (
+            ds.dataset(files[t], format="parquet")
+            for t in ("index", "dictionary", "docs"))
+
+
+def wand_topk_driver(spark, tables: DriverIndex, query: str, n_docs: int,
+                     avgdl: float, max_postings: int, k: int = 10,
+                     bm25: BM25Config = BM25Config(),
+                     weighted: bool = False,
+                     pre_parsed: tuple | None = None,
+                     idf_cache: dict | None = None,
+                     exclude_ids=None, bound_scale=None,
+                     after: tuple | None = None,
+                     boosts: dict | None = None) -> DataFrame | None:
+    """wand_topk's rows computed on the driver with no Spark job, or
+    None when the query's postings (the summed df of its present terms)
+    exceed ``max_postings``.  The route is chosen by the query's
+    postings, never by corpus size; a query with no postings (no known
+    term, an AND missing a term) gets its empty page here at any budget.
+
+    Same pieces as wand_topk's plan, read with pyarrow: the idf lookup
+    over ``tables.dictionary`` (query_term_idf, so a None return leaves
+    the terms in ``idf_cache`` for the wand_topk that follows), the
+    query's index rows by a ``term`` In filter (row-group pruning on the
+    term-sorted files), make_shard_scorer per shard with the same specs,
+    a (score DESC, doc_id ASC) top k, and urls by a ``doc_id`` In filter
+    on docs.  The scorer and its inputs are wand_topk's, so rows are
+    identical by construction.  The <= k rows come back as
+    ``createDataFrame(pandas)``, an Arrow local relation, and an empty
+    page as empty_topk: neither runs a job when collected."""
+    terms, is_bool = pre_parsed if pre_parsed is not None else parse_query(query)
+    if not terms or n_docs == 0 or avgdl == 0:
+        return empty_topk(spark)
+    tf_idf = query_term_idf(spark, tables.dictionary, sorted(set(terms)),
+                            n_docs, cache=idf_cache)
+    specs = _specs({None: (terms, is_bool)}, tf_idf, boosts)
+    if not specs:
+        return empty_topk(spark)
+    _, ordered, term_meta, is_bool, _ = specs[0]
+    if sum(tf_idf[t][0] for t in ordered) > max_postings:
+        return None
+    rows = tables.index.to_table(
+        filter=pc.field("term").isin(ordered)).to_pandas()
+    scorer = make_shard_scorer(term_meta, ordered, k, is_bool, avgdl, bm25,
+                               weighted=weighted, exclude_ids=exclude_ids,
+                               bound_scale=bound_scale, after=after)
+    shard = rows["shard"].to_numpy()
+    by_shard = np.argsort(shard, kind="stable")
+    cuts = np.flatnonzero(np.diff(shard[by_shard])) + 1
+    local = [scorer(rows.iloc[i]) for i in np.split(by_shard, cuts)
+             if len(i)]
+    if not local:
+        return empty_topk(spark)
+    doc_ids = np.concatenate([h["doc_id"].to_numpy() for h in local])
+    scores = np.concatenate([h["score"].to_numpy() for h in local])
+    top = np.lexsort((doc_ids, -scores))[:k]
+    urls = tables.docs.to_table(
+        columns=["doc_id", "url"],
+        filter=pc.field("doc_id").isin(doc_ids[top])).to_pandas()
+    page = pd.DataFrame({"doc_id": doc_ids[top], "score": scores[top]}) \
+        .merge(urls, on="doc_id", how="inner")
+    if page.empty:
+        return empty_topk(spark)
+    page.insert(0, "rank", np.arange(1, len(page) + 1, dtype=np.int32))
+    return spark.createDataFrame(page[["rank", "doc_id", "url", "score"]],
+                                 TOPK)
 
 
 _BATCH_LOCAL_SCHEMA = "query_id string, doc_id long, score double"

@@ -41,7 +41,7 @@ from pyspark.sql.window import Window
 from ..config import BM25Config
 from ..text.normalize import query_normalize
 from ..text.porter import stem
-from .query import empty_topk, query_term_idf
+from .query import doc_id_frame, empty_topk, query_term_idf, term_in
 
 _OPS = {"AND", "OR", "NOT"}
 
@@ -205,12 +205,11 @@ def bool_query_topk(postings: DataFrame, dictionary: DataFrame,
     )
     contrib = F.when(F.col("positive"), F.col("idf") * w).otherwise(F.lit(0.0))
     matches = (
-        postings.filter(F.col("term").isin(present))
+        postings.filter(term_in(present))
         .join(F.broadcast(terms_df), "term", "inner")
     )
     if exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         matches = matches.join(F.broadcast(dead), "doc_id", "left_anti")
 
     flag_aggs = [

@@ -25,6 +25,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -35,7 +36,24 @@ import math
 
 
 def empty_topk(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], TOPK)
+    """An empty TOPK page that collects with no Spark job: a one-row
+    Arrow local relation limited to none, which the optimizer folds into
+    an empty local table scan.  ``createDataFrame([], TOPK)`` (and an
+    empty pandas frame, which falls back to it) is an RDD scan whose
+    collect is one job, ~300 ms warm on local[2]."""
+    row = pd.DataFrame({"rank": [0], "doc_id": [0], "url": [""],
+                        "score": [0.0]})
+    return spark.createDataFrame(row, TOPK).limit(0)
+
+
+def doc_id_frame(spark: SparkSession, doc_ids) -> DataFrame:
+    """A (doc_id long) frame of ``doc_ids`` (a tombstone set, a result
+    page), sorted.  Built from a pandas frame, so Arrow ships it to the
+    JVM as a local relation: no Spark job, where a list of tuples runs
+    one job to pickle its rows."""
+    ids = np.asarray(sorted(int(i) for i in doc_ids), dtype=np.int64)
+    return spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
+                                 "doc_id long")
 
 
 def phrase_topk_indexed(
@@ -69,7 +87,7 @@ def phrase_topk_indexed(
     ``pre_parsed`` bypasses parse_query with an explicit stemmed term
     sequence (unstemmed indexes / programmatic callers).
 
-    Plan: pruned positions scan (static isin -> parquet row-group stats
+    Plan: pruned positions scan (static IN list -> parquet row-group stats
     on the term-sorted layout) -> optional broadcast anti-join against
     the deletion set (tombstones mask phrase results exactly like WAND's
     exclude_ids) -> ONE doc_id hash agg building per-offset position
@@ -88,8 +106,7 @@ def phrase_topk_indexed(
     if not terms or n_docs == 0 or avgdl == 0:
         return spark.createDataFrame([], PHRASE_TOPK)
     if exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         positions = positions.join(F.broadcast(dead), "doc_id", "left_anti")
     matched = phrase_match(positions, list(terms),
                            pos_col="positions", plural=True)
@@ -187,8 +204,7 @@ def phrase_topk_batch(
     if not parsed or n_docs == 0 or avgdl == 0:
         return spark.createDataFrame([], out_schema)
     if exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         positions = positions.join(F.broadcast(dead), "doc_id", "left_anti")
     occ = phrase_match_batch(positions, parsed,
                              pos_col="positions", plural=True)
@@ -256,17 +272,33 @@ def idf_lookup_frame(dictionary: DataFrame, terms) -> DataFrame:
     return dictionary.filter(term_in(sorted(terms))).select("term", "df")
 
 
-def query_term_idf(spark: SparkSession, dictionary: DataFrame, terms,
+def _term_df_rows(dictionary, terms):
+    """(term, df) rows of ``terms`` from ``dictionary``: a Spark frame
+    (one pushed-down scan job, ``idf_lookup_frame``) or a pyarrow
+    dataset over a snapshot's dictionary files (read on the driver with
+    the same In filter, no job)."""
+    if isinstance(dictionary, DataFrame):
+        return [(r["term"], r["df"])
+                for r in idf_lookup_frame(dictionary, terms).collect()]
+    table = dictionary.to_table(columns=["term", "df"],
+                                filter=pc.field("term").isin(sorted(terms)))
+    return zip(table.column("term").to_pylist(),
+               table.column("df").to_pylist())
+
+
+def query_term_idf(spark: SparkSession, dictionary, terms,
                    n_docs: int, cache: dict | None = None) -> dict:
-    """Driver-side df lookup for the query terms: ONE Spark job, a
-    pushed-down scan of the dictionary for <10 terms
-    (``idf_lookup_frame``) whose rows are summed per term on the
-    driver.  Returns {term: (df, idf)} for terms present.
+    """Driver-side df lookup for the query terms: a pushed-down scan of
+    the dictionary for <10 terms, its rows summed per term on the
+    driver.  ``dictionary`` is the Spark frame (ONE Spark job) or a
+    pyarrow dataset over the same snapshot's files (no job; the query
+    service's driver route).  Returns {term: (df, idf)} for terms
+    present.
 
     `cache` (optional, caller-owned, e.g. a long-lived query service /
     REPL): terms already looked up — INCLUDING absent ones, stored as
-    None — skip the Spark job entirely; only genuinely new terms pay a
-    lookup.  The reference loads its whole dictionary into driver
+    None — skip the lookup entirely; only genuinely new terms pay one.
+    The reference loads its whole dictionary into driver
     memory at startup (searcher.py); this caches only the queried
     working set, which is what fits when the dictionary has 10^9 terms.
     A cache is only valid for one immutable index snapshot (idf depends
@@ -281,8 +313,8 @@ def query_term_idf(spark: SparkSession, dictionary: DataFrame, terms,
         # dictionary has one row per term and the sum is the identity.
         # Integer sums, so the driver's sum equals Spark's exactly.
         dfs: dict = {}
-        for r in idf_lookup_frame(dictionary, missing).collect():
-            dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
+        for term, df in _term_df_rows(dictionary, missing):
+            dfs[term] = dfs.get(term, 0) + df
         for t, df in dfs.items():
             looked_up[t] = (
                 df, math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
@@ -567,7 +599,7 @@ def suggest_terms(dictionary: DataFrame, terms: list, max_edits: int = 1,
     if not wanted:
         return {}
     present = {r["term"] for r in dictionary
-               .filter(F.col("term").isin(wanted))
+               .filter(term_in(wanted))
                .select("term").distinct().collect()}
     out = {t: t for t in wanted if t in present}
     missing = []
@@ -621,7 +653,7 @@ def explain_score(postings: DataFrame, dictionary: DataFrame, query: str,
     so the contributions sum to the doc's ranked score.
 
     One tiny job: the postings scan prunes on BOTH the static term
-    isin() (row-group stats on the term-sorted layout) and the doc_id
+    IN list (row-group stats on the term-sorted layout) and the doc_id
     equality; the <=10-row term/idf side broadcasts.  Terms absent from
     the doc (or the dictionary) simply have no row — a boolean query's
     explanation with fewer rows than distinct terms is itself the
@@ -650,7 +682,7 @@ def explain_score(postings: DataFrame, dictionary: DataFrame, query: str,
         w = w * (F.col("imp") / F.lit(10.0))
     rows = (
         postings.filter((F.col("doc_id") == int(doc_id))
-                        & F.col("term").isin(present))
+                        & term_in(present))
         .join(F.broadcast(terms_df), "term")
     )
     return rows.select(
@@ -890,18 +922,17 @@ def _scored_candidates(postings: DataFrame, dictionary: DataFrame,
     if weighted:
         w = w * (F.col("imp") / F.lit(10.0))
     contrib = (F.col("mult") * F.col("idf")) * w
-    # explicit isin() before the broadcast join: the join itself would not
+    # explicit IN filter before the broadcast join: the join would not
     # push term predicates into the parquet scan; the static filter does
     # (row-group stats on the term-sorted layout skip non-query terms)
     matches = (
-        postings.filter(F.col("term").isin(present))
+        postings.filter(term_in(present))
         .join(F.broadcast(terms_df), "term", "inner")
     )
     if min_imp is not None:
         matches = matches.filter(F.col("imp") >= min_imp)
     if exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         matches = matches.join(F.broadcast(dead), "doc_id", "left_anti")
     if doc_filter is not None:
         matches = matches.join(
@@ -995,7 +1026,7 @@ def bm25_topk_exhaustive(
         return empty_topk(spark)
     if negated:
         neg_docs = (
-            postings.filter(F.col("term").isin(sorted(set(negated))))
+            postings.filter(term_in(sorted(set(negated))))
             .select("doc_id").distinct()
         )
         scores = scores.join(neg_docs, "doc_id", "left_anti")
@@ -1114,8 +1145,7 @@ def mixed_topk(positions: DataFrame, postings: DataFrame,
             parts.append(scores.select("doc_id", "score"))
 
     if phrases and exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         positions = positions.join(F.broadcast(dead), "doc_id", "left_anti")
     for p_terms in phrases:
         matched = phrase_match(positions, list(p_terms),

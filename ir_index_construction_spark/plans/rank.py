@@ -28,8 +28,10 @@ from ..config import BM25Config
 from .query import (
     _REGEX_META,
     _scored_candidates,
+    doc_id_frame,
     empty_topk,
     expand_prefix,
+    term_in,
 )
 
 # ---------------------------------------------------------------------------
@@ -234,7 +236,7 @@ def lm_dirichlet_topk(postings: DataFrame, dictionary: DataFrame,
         cf = {t: cf_cache[("cf", t)] for t in need if ("cf", t) in cf_cache}
     missing = [t for t in need if t not in cf]
     if missing:
-        rows = (dictionary.filter(F.col("term").isin(missing))
+        rows = (dictionary.filter(term_in(missing))
                 .groupBy("term").agg(F.sum("cf").alias("cf")).collect())
         for r in rows:
             cf[r["term"]] = int(r["cf"])
@@ -256,12 +258,11 @@ def lm_dirichlet_topk(postings: DataFrame, dictionary: DataFrame,
         + F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
     )
     matches = (
-        postings.filter(F.col("term").isin(present))
+        postings.filter(term_in(present))
         .join(F.broadcast(terms_df), "term", "inner")
     )
     if exclude_ids:
-        dead = spark.createDataFrame(
-            [(int(i),) for i in sorted(exclude_ids)], "doc_id long")
+        dead = doc_id_frame(spark, exclude_ids)
         matches = matches.join(F.broadcast(dead), "doc_id", "left_anti")
     scores = matches.groupBy("doc_id").agg(
         F.sum(addend).alias("score"),
@@ -377,7 +378,7 @@ def rescore_topk(positions: DataFrame, postings: DataFrame,
     if pairs:
         pair_terms = sorted({t for p in pairs for t in p})
         pos = _flat_positions(
-            positions.filter(F.col("term").isin(pair_terms))
+            positions.filter(term_in(pair_terms))
             .join(F.broadcast(first.select("doc_id")), "doc_id", "left_semi")
         )
         pairs_df = spark.createDataFrame(pairs, "t0 string, t1 string")

@@ -60,7 +60,7 @@ TOKENIZED_POS = StructType([
 # Positional postings table (opt-in).  One row per (term, doc) with the
 # full ascending position list — parquet's list<int32> delta/RLE encoding
 # is the compression layer; the layout is term-sorted within files so the
-# phrase scan's isin() prunes row groups exactly like the index table.
+# phrase scan's IN filter prunes row groups exactly like the index table.
 POSITIONS_TABLE = StructType([
     StructField("term", StringType(), False),
     StructField("doc_id", LongType(), False),

@@ -351,6 +351,15 @@ class Catalog:
             return None
         return self._table_snapshot(table, cat["tables"].get(table))
 
+    def snapshots(self, record: dict | None) -> dict:
+        """{table: snapshot} of one catalog record (``_catalog_current``
+        or ``catalog_record``): every table as of the same commit, so a
+        reader holding it never mixes two commits."""
+        if record is None:
+            return {}
+        return {t: self._table_snapshot(t, v)
+                for t, v in record["tables"].items()}
+
     def table_exists(self, table: str) -> bool:
         return self.current_snapshot(table) is not None
 
@@ -484,26 +493,29 @@ class Catalog:
         schema = StructType.fromJson(json.loads(snap["schema"]))
         if not snap["files"]:
             return spark.createDataFrame([], schema)
-        paths = [os.path.join(self._tdir(table), f) for f in snap["files"]]
-        return spark.read.schema(schema).parquet(*paths)
+        return spark.read.schema(schema).parquet(*self.files(table, snap))
 
-    def read_rows(self, table: str, columns: list | None = None) -> list:
+    def files(self, table: str, snapshot: dict) -> list:
+        """Absolute paths of a table snapshot's live data files."""
+        return [os.path.join(self._tdir(table), f) for f in snapshot["files"]]
+
+    def read_rows(self, table: str, columns: list | None = None,
+                  snapshot: dict | None = None) -> list:
         """The rows of a small flat table (ledgers, stats, segments,
-        tombstones) in its current snapshot, read on the driver with
-        pyarrow — no Spark job.  Returns the Rows
+        tombstones) in ``snapshot`` (default: the current one), read on
+        the driver with pyarrow — no Spark job.  Returns the Rows
         ``read(...).select(*columns).collect()`` would (Spark's
         ``fromInternal`` conversion: timestamps come back as naive local
         datetimes), in file order."""
-        snap = self.current_snapshot(table)
+        snap = snapshot or self.current_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
         schema = StructType.fromJson(json.loads(snap["schema"]))
         if columns is not None:
             schema = StructType([schema[c] for c in columns])
         cols: list = [[] for _ in schema.fields]
-        for rel in snap["files"]:
-            data = pq.read_table(os.path.join(self._tdir(table), rel),
-                                 columns=schema.names)
+        for path in self.files(table, snap):
+            data = pq.read_table(path, columns=schema.names)
             for out, field in zip(cols, schema.fields):
                 col = data.column(field.name)
                 if isinstance(field.dataType, TimestampType):

@@ -61,12 +61,17 @@ def _wand(spark, f, q, k=10):
         bound_scale=f["bound_scale"]).orderBy("rank").collect()]
 
 
-def _service(spark, cat):
+def _service(spark, cat, budget=None):
+    """A QueryService from its own copy of tools/submit_query.py, with
+    that copy's LOCAL_POSTINGS_BUDGET set to ``budget`` (None: the
+    default)."""
     spec = importlib.util.spec_from_file_location(
         "submit_query_segments",
         Path(__file__).resolve().parent.parent / "tools" / "submit_query.py")
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
+    if budget is not None:
+        m.LOCAL_POSTINGS_BUDGET = budget
     return m.QueryService(spark, cat)
 
 
@@ -178,6 +183,49 @@ def test_segmented_batch_matches_exhaustive_under_drift(spark, seg_env):
                 f["postings"], f["dictionary"], f["docs"], q,
                 f["n_docs"], f["avgdl"], k=k).orderBy("rank").collect()]
             assert got == want, (q, k)
+
+
+def test_segmented_driver_route_matches_spark_plan(spark, seg_env):
+    """The service's driver route over a two-segment catalog (segment
+    bound scales, per-segment dictionary delta rows) returns the rows of
+    the Spark plan, also with tombstones in a base and a streamed
+    segment, and launches no Spark job."""
+    from ir_index_construction_spark.plans.maintenance import tombstone_urls
+    from ir_index_construction_spark.schemas import TOMBSTONES
+
+    cat = seg_env["cat"]
+
+    def pages(budget):
+        svc = _service(spark, cat, budget)
+        svc._refresh()                 # snapshot load (doc_meta check)
+        sc = spark.sparkContext
+        sc.setJobGroup(f"segments-route-{budget}", "wand route")
+        try:
+            got = [[tuple(r) for r in svc.run(q, 10, "wand", w).collect()]
+                   for q in QUERIES for w in (False, True)]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(
+            f"segments-route-{budget}")
+        assert bool(jobs) == (budget == 0)
+        return got
+
+    assert _service(spark, cat)._refresh()[0]["bound_scale"]
+    want = pages(0)
+    assert pages(10 ** 12) == want and all(want)
+    top = [u for u, _ in _wand(spark, _frames(spark, cat), "machine learning")]
+    victims = [next(u for u in top
+                    if not u.startswith("https://long.example.org/")),
+               "https://long.example.org/page/1"]
+    assert tombstone_urls(spark, cat, victims) == 2
+    try:
+        want = pages(0)
+        assert pages(10 ** 12) == want
+        assert all(u not in victims for p in want for _, _, u, _ in p)
+    finally:
+        # leave seg_env unmutated for the tests that follow
+        cat.transaction().write(
+            spark.createDataFrame([], TOMBSTONES), "doc_tombstones").commit()
 
 
 def test_new_docs_surface_in_topk(spark, seg_env):

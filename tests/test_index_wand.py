@@ -2,6 +2,7 @@
 and real pruning (SURVEY.md §5.2 item 4, §7.1 steps 4-5)."""
 
 import math
+import uuid
 
 import numpy as np
 import pytest
@@ -215,14 +216,17 @@ def test_pruning_skips_blocks():
     assert list(both[0][1]) == [500]
 
 
-def test_workload_never_prunes_on_stale_bounds():
-    """Block-max bounds encoded at a smaller avgdl (an older index
-    segment) sit below the true scores at the current avgdl.  A single
-    query prunes, so it needs the segment's bound_scale; a workload
-    carries none and must decode in full even when it holds one query."""
+STALE_BUILT_AVGDL, STALE_AVGDL = 100.0, 1000.0
+
+
+def _stale_bound_rows():
+    """Index rows of alpha and beta over 256 docs, encoded at avgdl 100
+    and scored at 1000: alpha's spike at doc 50 sets theta, and beta's
+    winner, doc 200, sits in a block whose stale bound is below it.
+    Returns (rows, doc lengths)."""
     import pandas as pd
 
-    n, built_avgdl, avgdl = 256, 100.0, 1000.0
+    n = 256
     doc_ids = np.arange(n, dtype=np.int64)
     dls = np.full(n, 1000, np.int64)
     dls[50] = 100
@@ -231,10 +235,19 @@ def test_workload_never_prunes_on_stale_bounds():
     b_ids = doc_ids[doc_ids != 50]
     tfs_b = np.ones(n - 1, np.int64)
     tfs_b[b_ids == 200] = 50             # the winner, under a stale bound
-    pdf = pd.concat([
-        _index_rows_for("alpha", doc_ids, tfs_a, dls, built_avgdl),
-        _index_rows_for("beta", b_ids, tfs_b, dls[b_ids], built_avgdl),
-    ])
+    return pd.concat([
+        _index_rows_for("alpha", doc_ids, tfs_a, dls, STALE_BUILT_AVGDL),
+        _index_rows_for("beta", b_ids, tfs_b, dls[b_ids], STALE_BUILT_AVGDL),
+    ], ignore_index=True), dls
+
+
+def test_workload_never_prunes_on_stale_bounds():
+    """Block-max bounds encoded at a smaller avgdl (an older index
+    segment) sit below the true scores at the current avgdl.  A single
+    query prunes, so it needs the segment's bound_scale; a workload
+    carries none and must decode in full even when it holds one query."""
+    built_avgdl, avgdl = STALE_BUILT_AVGDL, STALE_AVGDL
+    pdf, _ = _stale_bound_rows()
     meta, terms = {"alpha": (1, 1.0), "beta": (1, 0.9)}, ["alpha", "beta"]
     args = (1, False, avgdl, BM25Config())
     # the fixture bites: unscaled stale bounds cut the winner's block
@@ -1620,3 +1633,263 @@ def test_query_service_wildcard_and_lm(spark, tmp_path, built, index_df):
         svc.run("machine learning", 10, "wand", False, rescore=20)
     with pytest.raises(SystemExit, match="positional"):
         svc.term_vectors(0)
+
+
+# ---- QueryService's driver route for small WAND queries ----
+
+def _service_module():
+    import importlib.util
+    from pathlib import Path
+
+    spec = importlib.util.spec_from_file_location(
+        "submit_query_route",
+        Path(__file__).resolve().parent.parent / "tools" / "submit_query.py")
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m
+
+
+def _service(spark, cat, budget=None):
+    """A QueryService from its own copy of tools/submit_query.py, with
+    that copy's LOCAL_POSTINGS_BUDGET set to ``budget`` (None: the
+    default): 0 forces every query with postings onto the Spark plan."""
+    m = _service_module()
+    if budget is not None:
+        m.LOCAL_POSTINGS_BUDGET = budget
+    return m.QueryService(spark, cat)
+
+
+def _with_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"route-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _page(svc, query, **kw):
+    rows = svc.run(query, kw.pop("k", 10), "wand", kw.pop("weighted", False),
+                   **kw).collect()
+    return [(r["rank"], r["doc_id"], r["url"], r["score"]) for r in rows]
+
+
+@pytest.fixture(scope="module")
+def wand_catalog(spark, built, index_df, tmp_path_factory):
+    from ir_index_construction_spark.sources.catalog import Catalog
+
+    cat = Catalog(str(tmp_path_factory.mktemp("route") / "cat"))
+    txn = cat.transaction()
+    txn.write(built.postings, "postings")
+    txn.write(built.docs, "docs")
+    txn.write(built.dictionary, "dictionary")
+    txn.write(index_df, "index")
+    txn.write(spark.createDataFrame(
+        [(built.n_docs, built.avgdl, 1)],
+        "n_docs long, avgdl double, n_terms long"), "stats")
+    txn.commit()
+    return cat
+
+
+def _routes_agree(spark, cat, cases):
+    """Every (query, run kwargs) gives the same rows with the Spark plan
+    forced (budget 0) and with every query in budget; every driver
+    page, empty ones included, launches no Spark job.  Returns the
+    pages."""
+    plan = _service(spark, cat, 0)
+    local = _service(spark, cat, 10 ** 12)
+    pages = []
+    for q, kw in cases:
+        want = _page(plan, q, **kw)
+        got, jobs = _with_jobs(spark, lambda: _page(local, q, **kw))
+        assert got == want, (q, kw)
+        assert jobs == 0, (q, kw, jobs)
+        pages.append(want)
+    return pages
+
+
+def test_driver_route_matches_spark_plan(spark, wand_catalog):
+    """OR, AND (one with a missing term), all-absent and stopword-only
+    queries, weighted, search-after and boosts: both routes return
+    identical (rank, doc_id, url, score) rows.  (A query with no
+    postings gets its empty page on the driver at any budget.)"""
+    cases = [(q, {}) for q in QUERY_SET]
+    cases += [(q, {"weighted": True}) for q in QUERY_SET]
+    cases += [("machine^2.5 learning", {}), ("software^0.5 AND engineering",
+                                             {"k": 5})]
+    pages = _routes_agree(spark, wand_catalog, cases)
+    assert sum(1 for p in pages if p) >= 10
+    assert not pages[QUERY_SET.index("machine AND zzzymissing")]
+    # search-after: the next page after the 3rd row of a deep page
+    deep = _page(_service(spark, wand_catalog, 0), "machine learning", k=30)
+    _, d, _, s = deep[2]
+    after = _routes_agree(spark, wand_catalog, [
+        ("machine learning", {"after": (s, d)}),
+        ("machine learning", {"after": (s, d), "weighted": True})])
+    assert [r[1] for r in after[0]] == [r[1] for r in deep[3:13]]
+
+
+def test_driver_route_applies_tombstones(spark, built, index_df, tmp_path):
+    """Tombstoned docs are dropped by both routes alike (the top docs of
+    the undeleted result are deleted, so backfill is exercised)."""
+    from ir_index_construction_spark.plans.maintenance import tombstone_urls
+    from ir_index_construction_spark.sources.catalog import Catalog
+
+    cat = Catalog(str(tmp_path / "cat_route_tomb"))
+    txn = cat.transaction()
+    txn.write(built.docs, "docs")
+    txn.write(built.dictionary, "dictionary")
+    txn.write(index_df, "index")
+    txn.write(spark.createDataFrame(
+        [(built.n_docs, built.avgdl, 1)],
+        "n_docs long, avgdl double, n_terms long"), "stats")
+    txn.commit()
+    top = _page(_service(spark, cat, 0), "machine learning")
+    assert tombstone_urls(spark, cat, [r[2] for r in top[:3]]) == 3
+    pages = _routes_agree(spark, cat, [
+        ("machine learning", {}), ("machine AND learning", {}),
+        ("learning machine learning", {"weighted": True})])
+    assert [r[1] for r in pages[0]][:7] == [r[1] for r in top[3:]]
+
+
+def test_driver_route_budget_boundary(spark, built, wand_catalog):
+    """Routing is by the query's postings: a query whose summed df fits
+    the budget runs no Spark job; one posting over, it runs the Spark
+    plan; both return the same rows."""
+    from ir_index_construction_spark.text.normalize import parse_query
+
+    q = "machine learning"
+    terms = set(parse_query(q)[0])
+    postings = sum(r["df"] for r in built.dictionary.collect()
+                   if r["term"] in terms)
+    fits = _service(spark, wand_catalog, postings)
+    over = _service(spark, wand_catalog, postings - 1)
+    for svc in (fits, over):
+        _page(svc, q)                  # load the snapshot, warm the idf
+    got, jobs = _with_jobs(spark, lambda: _page(fits, q))
+    want, plan_jobs = _with_jobs(spark, lambda: _page(over, q))
+    assert jobs == 0 and plan_jobs > 0
+    assert got == want and got
+
+
+def test_driver_route_sees_commit_behind_service(spark, tmp_path):
+    """A commit made behind the running service is served by the next
+    driver-route query: its snapshot's files, stats and idf, never a
+    mix of the old and new commit."""
+    from ir_index_construction_spark.sources.catalog import Catalog
+
+    def commit(cat, postings, docs):
+        txn = cat.transaction()
+        p = spark.createDataFrame(
+            postings, "term string, doc_id long, tf int, imp int, dl int")
+        txn.write(build_compressed_index(p, 4.0), "index")
+        txn.write(spark.createDataFrame(
+            docs, "doc_id long, url string, doc_len int"), "docs")
+        df = {}
+        for t, *_ in postings:
+            df[t] = df.get(t, 0) + 1
+        txn.write(spark.createDataFrame(
+            [(t, n, n) for t, n in df.items()],
+            "term string, df long, cf long"), "dictionary")
+        txn.write(spark.createDataFrame(
+            [(len(docs), 4.0, len(df))],
+            "n_docs long, avgdl double, n_terms long"), "stats")
+        txn.commit()
+
+    cat = Catalog(str(tmp_path / "cat_route_advance"))
+    commit(cat, [("foo", 1, 2, 10, 4)], [(1, "u1", 4)])
+    svc = _service(spark, cat)
+    first = _page(svc, "foo")
+    assert [r[2] for r in first] == ["u1"]
+    commit(cat, [("foo", 1, 2, 10, 4), ("foo", 2, 5, 10, 4),
+                 ("bar", 3, 1, 10, 4)],
+           [(1, "u1", 4), (2, "u2", 4), (3, "u3", 4)])
+    got, jobs = _with_jobs(spark, lambda: _page(svc, "foo"))
+    assert [r[2] for r in got] == ["u2", "u1"] and jobs == 0
+    assert got == _page(_service(spark, cat, 0), "foo")
+    assert got[1][3] > first[0][3]        # n_docs 1 -> 3 raised the idf
+
+
+def test_tombstone_frame_launches_no_job(spark, built, monkeypatch):
+    """The tombstone set reaches the JVM as an Arrow local relation
+    (plans/query.doc_id_frame), where a list of tuples is an RDD whose
+    rows a Spark job pickles before the broadcast: the exhaustive plan
+    returns the same rows, its tombstone side a local table scan."""
+    from ir_index_construction_spark.plans import query as qmod
+
+    def run():
+        df = qmod.bm25_topk_exhaustive(
+            built.postings, built.dictionary, built.docs, "machine learning",
+            built.n_docs, built.avgdl, k=10, exclude_ids=dead)
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        return [tuple(r) for r in df.collect()], (
+            "LocalTableScan [doc_id" in plan, "ExistingRDD[doc_id" in plan)
+
+    def pickled(s, ids):
+        return s.createDataFrame([(int(i),) for i in sorted(ids)],
+                                 "doc_id long")
+
+    top = qmod.bm25_topk_exhaustive(
+        built.postings, built.dictionary, built.docs, "machine learning",
+        built.n_docs, built.avgdl, k=5).collect()
+    dead = frozenset(r["doc_id"] for r in top[:3])
+    assert _with_jobs(spark, lambda: qmod.doc_id_frame(
+        spark, dead).collect())[1] == 0
+    assert _with_jobs(spark, lambda: pickled(spark, dead).collect())[1] == 1
+    got, scans = run()
+    monkeypatch.setattr(qmod, "doc_id_frame", pickled)
+    want, pickled_scans = run()
+    assert got == want and not dead & {r[1] for r in got}
+    assert scans == (True, False) and pickled_scans == (False, True)
+
+
+def test_empty_page_launches_no_job(spark):
+    """empty_topk, the page of every zero-hit query, is a TOPK frame
+    whose collect runs no Spark job."""
+    from ir_index_construction_spark.plans.query import empty_topk
+    from ir_index_construction_spark.schemas import TOPK
+
+    page = empty_topk(spark)
+    assert page.schema == TOPK
+    assert _with_jobs(spark, page.collect) == ([], 0)
+
+
+def test_driver_route_scales_stale_segment_bounds(spark, tmp_path):
+    """The service hands the driver route its segments' bound scales: on
+    a segment whose block-max bounds are stale, both routes return the
+    winner that unscaled pruning would cut."""
+    from datetime import datetime
+
+    from ir_index_construction_spark.schemas import INDEX, INDEX_SEGMENTS
+    from ir_index_construction_spark.sources.catalog import Catalog
+
+    rows, dls = _stale_bound_rows()
+    n_docs = 10 ** 6              # idf ~ equal for both terms; boost 0.9
+    cat = Catalog(str(tmp_path / "cat_stale"))
+    txn = cat.transaction()
+    txn.write(spark.createDataFrame(rows[INDEX.names], INDEX), "index")
+    txn.write(spark.createDataFrame(
+        [(i, f"u{i}", int(dl)) for i, dl in enumerate(dls)],
+        "doc_id long, url string, doc_len int"), "docs")
+    txn.write(spark.createDataFrame(
+        [("alpha", 256, 256), ("beta", 255, 255)],
+        "term string, df long, cf long"), "dictionary")
+    txn.write(spark.createDataFrame(
+        [(n_docs, STALE_AVGDL, 2)],
+        "n_docs long, avgdl double, n_terms long"), "stats")
+    txn.write(spark.createDataFrame(
+        [("seg0", 0, 0, STALE_BUILT_AVGDL, 256, datetime(2024, 1, 1))],
+        INDEX_SEGMENTS), "index_segments")
+    txn.commit()
+
+    idf = {t: math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+           for t, df in (("alpha", 256), ("beta", 255))}
+    meta = {"alpha": (1, idf["alpha"]), "beta": (1, idf["beta"] * 0.9)}
+    unscaled = make_shard_scorer(meta, ["alpha", "beta"], 1, False,
+                                 STALE_AVGDL, BM25Config())(rows)
+    assert list(unscaled["doc_id"]) == [50]        # the fixture bites
+    pages = _routes_agree(spark, cat, [("alpha beta^0.9", {"k": 1})])
+    assert [r[1] for r in pages[0]] == [200]

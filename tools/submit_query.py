@@ -95,6 +95,18 @@ def _half_life(v):
     return fv
 
 
+# Driver-route budget, read on every query: a plain WAND query whose
+# terms hold at most this many postings (summed df) is scored on the
+# driver with no Spark job; above it the query runs wand_topk's Spark
+# plan.  tools/route_crossover.py times both routes against a query's
+# postings on a synthetic 1M-doc catalog: at local[2] on a 4-vCPU VM
+# the driver takes under half the Spark plan's time up to 1M postings
+# and stays ahead to ~4M (README.md has the figures).  The benchmark's
+# catalogs hold under 600 docs, so every benchmark query is in budget
+# and the benchmark times only the driver route.
+LOCAL_POSTINGS_BUDGET = 1_000_000
+
+
 class QueryService:
     """Steady-state query service: loads stats/docs/dictionary/index
     frames ONCE per catalog snapshot (round-2 ADVICE: the REPL used to
@@ -102,7 +114,18 @@ class QueryService:
     term-stats cache to the snapshot id so a rebuild behind the running
     service invalidates cached idf instead of serving stale values.
     Snapshot staleness is detected by one cheap pointer read per query;
-    frames reload only when the catalog actually advanced."""
+    frames reload only when the catalog actually advanced, and every
+    table is read as of that one catalog commit.
+
+    Plain ``wand`` queries route by cost.  After the idf lookup (read on
+    the driver from the snapshot's dictionary files), a query whose
+    terms hold at most ``LOCAL_POSTINGS_BUDGET`` postings is scored on
+    the driver (operators/topk.py wand_topk_driver: pyarrow reads of the
+    snapshot's index and docs files, the same shard scorer, no Spark
+    job); a larger one runs wand_topk's Spark plan.  A query with no
+    postings (no known term, an AND missing a term) gets its empty page
+    on the driver whatever the budget.  Every other mode runs its Spark
+    plan."""
 
     def __init__(self, spark, cat):
         from ir_index_construction_spark.plans.query import TermStatsCache
@@ -117,16 +140,23 @@ class QueryService:
         self._f: dict = {}
 
     def _refresh(self):
+        from ir_index_construction_spark.operators.topk import DriverIndex
+
         cur = self.cat._catalog_current()
         cid = cur["catalog_id"] if cur else None
         if cid != self._catalog_id:
             self._catalog_id = cid
-            stats = self.cat.read_rows("stats")[0]
+            # every table as of the commit `cur` names: a commit landing
+            # during the reload cannot tear the snapshot
+            snaps = self.cat.snapshots(cur)
+            stats = self.cat.read_rows("stats",
+                                       snapshot=snaps.get("stats"))[0]
             self._f = {
                 "n_docs": stats["n_docs"],
                 "avgdl": float(stats["avgdl"]),
-                "docs": self.cat.read(self.spark, "docs"),
-                "dictionary": self.cat.read(self.spark, "dictionary"),
+                "docs": self.cat.read(self.spark, "docs", snaps.get("docs")),
+                "dictionary": self.cat.read(self.spark, "dictionary",
+                                            snaps.get("dictionary")),
             }
             # rdictionary: the rterm-sorted reversed projection written
             # by build/reindex/segment commits — leading wildcards prune
@@ -136,14 +166,22 @@ class QueryService:
             # is self-sufficient, no caller-supplied dims frame.
             for t in ("index", "postings", "positions", "rdictionary",
                       "doc_meta"):
-                if self.cat.table_exists(t):
-                    self._f[t] = self.cat.read(self.spark, t)
+                if t in snaps:
+                    self._f[t] = self.cat.read(self.spark, t, snaps[t])
             if "doc_meta" in self._f:
                 warn = doc_meta_coverage_warning(self._f["doc_meta"],
                                                  self._f["docs"],
                                                  self._f["n_docs"])
                 if warn:
                     print(warn, file=sys.stderr)
+            # the driver route's view of the same snapshot: its live
+            # files, opened as pyarrow datasets once per snapshot
+            local = ("index", "dictionary", "docs")
+            self._f["files"] = {t: self.cat.files(t, snaps[t])
+                                for t in local if t in snaps}
+            self._f["local"] = None
+            if all(self._f["files"].get(t) for t in local):
+                self._f["local"] = DriverIndex(self._f["files"])
             # tombstoned doc_ids (plans/maintenance.py): bounded by
             # takedown volume, loaded once per snapshot, applied to
             # every query until a purge commits a new snapshot
@@ -152,17 +190,19 @@ class QueryService:
             # avgdl_now/built_avgdl to stay valid upper bounds (see
             # make_scorer bound_scale)
             self._f["bound_scale"] = None
-            if self.cat.table_exists("index_segments"):
+            if "index_segments" in snaps:
                 bs = [(r["min_shard"], r["max_shard"],
                        max(1.0, self._f["avgdl"] / r["built_avgdl"]))
-                      for r in self.cat.read_rows("index_segments")
+                      for r in self.cat.read_rows(
+                          "index_segments", snapshot=snaps["index_segments"])
                       if r["built_avgdl"] > 0]
                 self._f["bound_scale"] = bs or None
             self._f["exclude_ids"] = None
-            if self.cat.table_exists("doc_tombstones"):
+            if "doc_tombstones" in snaps:
                 ids = frozenset(
-                    r["doc_id"] for r in
-                    self.cat.read_rows("doc_tombstones", ["doc_id"]))
+                    r["doc_id"] for r in self.cat.read_rows(
+                        "doc_tombstones", ["doc_id"],
+                        snapshot=snaps["doc_tombstones"]))
                 self._f["exclude_ids"] = ids or None
         return self._f, self._tsc.for_snapshot(cid)
 
@@ -177,10 +217,11 @@ class QueryService:
             recency_origin: str = "2025-01-01"):
         from pyspark.sql import functions as F
 
-        from ir_index_construction_spark.operators.topk import wand_topk
+        from ir_index_construction_spark.operators.topk import (
+            wand_topk, wand_topk_driver)
         from ir_index_construction_spark.plans.query import (
-            bm25_topk_exhaustive, collapse_by_domain, fuzzy_topk,
-            more_like_this, phrase_topk_indexed, prefix_topk)
+            bm25_topk_exhaustive, collapse_by_domain, doc_id_frame,
+            fuzzy_topk, more_like_this, phrase_topk_indexed, prefix_topk)
 
         f, idf_cache = self._refresh()
         # metadata query family (--filter / --facet-date / --recency):
@@ -399,8 +440,7 @@ class QueryService:
                              exclude_ids=f["exclude_ids"],
                              bound_scale=f["bound_scale"])
             ids = [r["doc_id"] for r in page.select("doc_id").collect()]
-            fg = self.spark.createDataFrame([(i,) for i in ids],
-                                            "doc_id long")
+            fg = doc_id_frame(self.spark, ids)
             return significant_terms(f["postings"], f["dictionary"],
                                      f["n_docs"], fg, n_fg=len(ids),
                                      top_n=k)
@@ -479,12 +519,18 @@ class QueryService:
         # --filter likewise: the allowed-docs set is data-sized, so it
         # stays a distributed semi-join on the exhaustive plan.
         if mode == "wand" and min_match is None and doc_filter is None:
+            kw = dict(k=k, weighted=weighted, idf_cache=idf_cache,
+                      pre_parsed=pre, boosts=boosts,
+                      exclude_ids=f["exclude_ids"],
+                      bound_scale=f["bound_scale"], after=after)
+            if f["local"] is not None:
+                page = wand_topk_driver(
+                    self.spark, f["local"], query, f["n_docs"], f["avgdl"],
+                    LOCAL_POSTINGS_BUDGET, **kw)
+                if page is not None:
+                    return page
             return wand_topk(f["index"], f["dictionary"], f["docs"],
-                             query, f["n_docs"], f["avgdl"], k=k,
-                             weighted=weighted, idf_cache=idf_cache,
-                             pre_parsed=pre, boosts=boosts,
-                             exclude_ids=f["exclude_ids"],
-                             bound_scale=f["bound_scale"], after=after)
+                             query, f["n_docs"], f["avgdl"], **kw)
         return bm25_topk_exhaustive(f["postings"], f["dictionary"],
                                     f["docs"], query, f["n_docs"],
                                     f["avgdl"], k=k, weighted=weighted,
