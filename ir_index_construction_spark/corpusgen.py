@@ -161,9 +161,3 @@ def make_doc(i: int, seed: int = 42) -> dict:
 
 def make_corpus(n_docs: int, seed: int = 42) -> list:
     return [make_doc(i, seed) for i in range(n_docs)]
-
-
-def corpus_pandas(n_docs: int, seed: int = 42):
-    import pandas as pd
-
-    return pd.DataFrame(make_corpus(n_docs, seed))

@@ -15,11 +15,26 @@ Conventions for oracle parity:
 Rows-only queries (driver records row-count/schema only): the full
 north-rule pipeline (build + BM25/WAND over the synthetic corpus), whose
 ground truth is the pure-Python oracle exercised in tests/.
+
+Shared fragments.  The inline BM25 queries are built from one set of
+Spark helpers: ``_bm25_base`` (docs, tokens, postings, dl, dictionary,
+n_docs, n_tokens, avgdl — the two count jobs every scorer ran inline),
+``_idf`` / ``_bm25_w`` (the two column expressions), ``_term_idf`` /
+``_matches`` / ``_bm25_scores`` / ``_bm25_or`` (query terms -> scored
+docs) and ``_ranked`` (the TakeOrderedAndProject cut plus the rank
+column).  On
+the oracle side ``SQL_BM25_BASE`` (tokens, postings, dl, consts, dict)
+and ``SQL_IDF_CTE`` (the query-term idf CTE) are spliced only into
+strings whose text they reproduce byte for byte: the ``oracle_sql()``
+text is the driver's pinned instrument (tests/test_entry_contract.py
+holds its sha256), so a twin that differs by one character keeps its
+own spelling.
 """
 
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -29,6 +44,7 @@ from pyspark.sql.window import Window
 # ---------------------------------------------------------------------------
 
 _NORM_RE = "[^a-z0-9\\s]"
+K1, B = 1.2, 0.75
 
 SQL_TOKS = """
 toks AS (
@@ -41,25 +57,144 @@ toks AS (
 toks2 AS (SELECT doc_id, term FROM toks WHERE term <> '')
 """
 
+# postings / dl / corpus constants / dictionary over SQL_TOKS: the
+# prelude of every SQL-parity BM25 twin; a string splices it in first
+# and continues with its own CTEs
+SQL_BM25_BASE = f"""
+WITH {SQL_TOKS},
+postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
+dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
+consts AS (
+    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
+           (SELECT count(*) FROM toks2)::DOUBLE
+             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
+),
+dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),"""
+
+# the query-term idf CTE, open for the caller's WHERE clause
+SQL_IDF_CTE = """q AS (
+    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
+    FROM dict d, consts c"""
+
+
+def _split_text():
+    """O8+O9 without stemming: punctuation -> space, lower, split."""
+    return F.split(
+        F.trim(F.regexp_replace(F.lower(F.col("text")), _NORM_RE, " ")),
+        r"\s+")
+
 
 def _tokens(df: DataFrame) -> DataFrame:
-    """O8+O9 without stemming: punctuation -> space, lower, split."""
     return (
-        df.select(
-            "doc_id",
-            F.explode(
-                F.split(
-                    F.trim(F.regexp_replace(F.lower(F.col("text")), _NORM_RE, " ")),
-                    r"\s+",
-                )
-            ).alias("term"),
-        )
+        df.select("doc_id", F.explode(_split_text()).alias("term"))
+        .filter(F.col("term") != "")
+    )
+
+
+def _positions(df: DataFrame) -> DataFrame:
+    """_tokens plus each token's 0-based position."""
+    return (
+        df.select("doc_id", F.posexplode(_split_text()).alias("pos", "term"))
         .filter(F.col("term") != "")
     )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+class _Bm25Base(NamedTuple):
+    docs: DataFrame
+    toks: DataFrame
+    postings: DataFrame         # term, doc_id, tf (+ imp when zoned)
+    dl: DataFrame               # doc_id, dl
+    dictionary: DataFrame       # term, df
+    n_docs: int
+    n_tokens: int
+    avgdl: float
+
+
+def _bm25_base(spark: SparkSession, sf_dir: str,
+               zoned: bool = False) -> _Bm25Base:
+    """The BM25 inputs of the documents table: two count jobs (docs,
+    then tokens), everything else lazy.  ``zoned`` tokenizes with
+    positions (``toks`` carries ``pos``) and gives each posting its
+    zone importance ``imp``: the first 8 tokens of a document are its
+    'title zone' (weight 20), the rest weight 10 (the q26 scheme)."""
+    docs = _docs(spark, sf_dir)
+    toks = _positions(docs) if zoned else _tokens(docs)
+    n_docs = docs.count()
+    aggs = [F.count("*").alias("tf")]
+    if zoned:
+        aggs.append(
+            F.max(F.when(F.col("pos") < 8, 20).otherwise(10)).alias("imp"))
+    postings = toks.groupBy("term", "doc_id").agg(*aggs)
+    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    n_tokens = toks.count()
+    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
+    return _Bm25Base(docs, toks, postings, dl, dictionary, n_docs, n_tokens,
+                     n_tokens / n_docs)
+
+
+def _idf(n_docs: int, df: str = "df"):
+    return F.log((F.lit(float(n_docs)) - F.col(df) + 0.5)
+                 / (F.col(df) + 0.5) + 1.0)
+
+
+def _bm25_w(avgdl: float, tf: str = "tf"):
+    """BM25 tf-normalization of column ``tf`` against column ``dl``."""
+    return (F.col(tf) * F.lit(K1 + 1.0)) / (
+        F.col(tf) + F.lit(K1) * (F.lit(1.0 - B)
+                                 + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
+    )
+
+
+def _term_idf(spark: SparkSession, base: _Bm25Base, terms) -> DataFrame:
+    """The dictionary rows of ``terms`` (a tiny broadcast literal
+    frame), with their idf."""
+    qt = spark.createDataFrame([(t,) for t in terms], "term string")
+    return base.dictionary.join(F.broadcast(qt), "term").withColumn(
+        "idf", _idf(base.n_docs))
+
+
+def _matches(base: _Bm25Base, term_idf: DataFrame,
+             postings: DataFrame | None = None) -> DataFrame:
+    """(doc_id, term, tf, idf, dl) for the postings of the scored
+    terms; ``postings`` narrows base.postings first."""
+    p = base.postings if postings is None else postings
+    return (p.join(F.broadcast(term_idf.select("term", "idf")), "term")
+            .join(base.dl, "doc_id"))
+
+
+def _bm25_scores(matches: DataFrame, avgdl: float, *aggs) -> DataFrame:
+    """Per-doc BM25 score (rounded to 6 places) plus extra aggs."""
+    return matches.groupBy("doc_id").agg(
+        F.round(F.sum(F.col("idf") * _bm25_w(avgdl)), 6).alias("score"),
+        *aggs)
+
+
+def _bm25_or(spark, base, terms, *aggs):
+    """OR-mode BM25 scores of ``terms`` over ``base``."""
+    return _bm25_scores(_matches(base, _term_idf(spark, base, terms)),
+                        base.avgdl, *aggs)
+
+
+def _n_terms():
+    return F.count("*").cast("long").alias("n_terms")
+
+
+def _ranked(scores: DataFrame, *cols, k: int = 10) -> DataFrame:
+    """Top ``k`` of ``scores`` by (score desc, doc_id asc) with their
+    1-based rank.  orderBy().limit(k) = TakeOrderedAndProject
+    (per-partition heap + driver merge); the rank window then runs over
+    <= k rows, never the full scored set (mirrors plans/query.py)."""
+    order = (F.col("score").desc(), F.col("doc_id").asc())
+    return (
+        scores.orderBy(*order).limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order))
+                    .cast("long"))
+        .select(*cols)
+    )
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,57 +386,16 @@ FROM toks2
 # ---------------------------------------------------------------------------
 
 BM25_QUERY_TERMS = ("data", "query", "scan")
-K1, B = 1.2, 0.75
 
 
 def q_bm25_topk(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    total_tokens = toks.count()
-    avgdl = total_tokens / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-
-    terms = spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    )
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score")
-    )
-    # orderBy().limit(k) = TakeOrderedAndProject (per-partition heap +
-    # driver merge); the window rank then runs over <= 10 rows, never the
-    # full scored set (mirrors plans/query.py:104-113)
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    b = _bm25_base(spark, sf_dir)
+    return _ranked(_bm25_or(spark, b, BM25_QUERY_TERMS),
+                   "rank", "doc_id", "score")
 
 
-SQL_BM25_TOPK = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_BM25_TOPK = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(BM25_QUERY_TERMS)!r}
 ),
 scores AS (
@@ -329,45 +423,12 @@ def q_weighted_topk(spark, sf_dir):
     its 'title zone' (weight 20), the rest default weight 10;
     imp(term, doc) = max zone weight over occurrences (indexer.py:
     197-201 semantics), contribution = idf * w * (imp/10)."""
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col("text")), _NORM_RE, " ")),
-                r"\s+",
-            )
-        ).alias("pos", "term"),
-    ).filter(F.col("term") != "")
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(
-        F.count("*").alias("tf"),
-        F.max(F.when(F.col("pos") < 8, 20).otherwise(10)).alias("imp"),
-    )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-
-    terms = spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    )
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w * (F.col("imp") / F.lit(10.0))), 6).alias("score")
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    b = _bm25_base(spark, sf_dir, zoned=True)
+    matches = _matches(b, _term_idf(spark, b, BM25_QUERY_TERMS))
+    scores = matches.groupBy("doc_id").agg(F.round(F.sum(
+        F.col("idf") * _bm25_w(b.avgdl) * (F.col("imp") / F.lit(10.0))), 6)
+        .alias("score"))
+    return _ranked(scores, "rank", "doc_id", "score")
 
 
 SQL_WEIGHTED_TOPK = f"""
@@ -395,9 +456,7 @@ consts AS (
              / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
 ),
 dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(BM25_QUERY_TERMS)!r}
 ),
 scores AS (
@@ -946,14 +1005,6 @@ def _built_corpus(spark, n_docs: int = 240):
     return _CORPUS_CACHE[key]
 
 
-def q_wand_search(spark, sf_dir):
-    from .operators.topk import wand_topk
-
-    built, index, cfg = _built_corpus(spark)
-    return wand_topk(index, built.dictionary, built.docs,
-                     "machine learning", built.n_docs, built.avgdl, k=10)
-
-
 def q_wand_vs_exhaustive(spark, sf_dir):
     """Self-verifying: rows where the WAND path and the exhaustive BM25
     path disagree on the top-k SET or on scores beyond 1e-9 for the
@@ -1060,19 +1111,8 @@ def q_wand_unstemmed(spark, sf_dir):
 # Ranks on the UNROUNDED score (as WAND does natively); round(_, 6) only
 # in the output projection.  SQL_BM25_TOPK instead rounds before ranking
 # because its Spark twin q08 does too.
-SQL_WAND_UNSTEMMED = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_WAND_UNSTEMMED = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(BM25_QUERY_TERMS)!r}
 ),
 scores AS (
@@ -1108,19 +1148,8 @@ def q_wand_boolean(spark, sf_dir):
         F.round("score", 6).alias("score"))
 
 
-SQL_WAND_BOOLEAN = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_WAND_BOOLEAN = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(BM25_QUERY_TERMS)!r}
 ),
 scores AS (
@@ -1164,16 +1193,7 @@ def q_wand_batch(spark, sf_dir):
         F.round("score", 6).alias("score"))
 
 
-SQL_WAND_BATCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
+SQL_WAND_BATCH = f"""{SQL_BM25_BASE}
 qterms AS (SELECT * FROM (VALUES
     ('or3', 'data', 1, false), ('or3', 'query', 1, false), ('or3', 'scan', 1, false),
     ('and3', 'data', 1, true), ('and3', 'query', 1, true), ('and3', 'scan', 1, true),
@@ -1991,9 +2011,7 @@ def q_phrase_batch(spark, sf_dir):
     scored = (
         occ.join(dl, "doc_id")
         .withColumn("df_p", F.count("*").over(qwin).cast("double"))
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df_p") + 0.5)
-            / (F.col("df_p") + 0.5) + 1.0))
+        .withColumn("idf", _idf(n_docs, "df_p"))
         .withColumn("score", F.round(
             F.col("idf") * (F.col("ptf") * F.lit(K1 + 1.0))
             / (F.col("ptf") + F.lit(K1) * (F.lit(1.0 - B)
@@ -2063,55 +2081,24 @@ ORDER BY query_id, rank
 PREFIX_Q, MAX_EXPANSIONS = "s", 4
 
 
+def _expansion_topk(spark, base, terms):
+    """An expansion (the library's expand_* over the dictionary) scored
+    as one OR-mode BM25 query: the shape of the prefix, fuzzy, regex
+    and wildcard queries."""
+    return _ranked(_bm25_or(spark, base, terms, _n_terms()),
+                   "rank", "doc_id", "n_terms", "score")
+
+
 def q_prefix_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    expansion = (
-        dictionary.filter(F.col("term").startswith(PREFIX_Q))
-        .orderBy(F.col("df").desc(), F.col("term").asc())
-        .limit(MAX_EXPANSIONS)
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    matches = (
-        postings.join(F.broadcast(expansion.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    from .plans.query import expand_prefix
+
+    b = _bm25_base(spark, sf_dir)
+    return _expansion_topk(
+        spark, b, expand_prefix(b.dictionary, PREFIX_Q, MAX_EXPANSIONS))
 
 
-SQL_PREFIX_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_PREFIX_SEARCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term LIKE '{PREFIX_Q}%'
     ORDER BY d.df DESC, d.term ASC
     LIMIT {MAX_EXPANSIONS}
@@ -2143,51 +2130,16 @@ NOT_POS_TERMS, NOT_NEG_TERM = ("data", "query"), "scan"
 
 
 def q_not_query(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in NOT_POS_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    neg_docs = (postings.filter(F.col("term") == NOT_NEG_TERM)
+    b = _bm25_base(spark, sf_dir)
+    neg_docs = (b.postings.filter(F.col("term") == NOT_NEG_TERM)
                 .select("doc_id").distinct())
-    scores = scores.join(neg_docs, "doc_id", "left_anti")
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    scores = _bm25_or(spark, b, NOT_POS_TERMS).join(
+        neg_docs, "doc_id", "left_anti")
+    return _ranked(scores, "rank", "doc_id", "score")
 
 
-SQL_NOT_QUERY = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_NOT_QUERY = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(NOT_POS_TERMS)!r}
 ),
 scores AS (
@@ -2221,57 +2173,16 @@ FUZZY_Q, MAX_EDITS, MAX_FUZZY_EXP = "par", 2, 8
 
 
 def q_fuzzy_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    expansion = (
-        dictionary
-        .withColumn("dist", F.levenshtein(F.col("term"), F.lit(FUZZY_Q)))
-        .filter(F.col("dist") <= MAX_EDITS)
-        .orderBy(F.col("dist").asc(), F.col("df").desc(),
-                 F.col("term").asc())
-        .limit(MAX_FUZZY_EXP)
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    matches = (
-        postings.join(F.broadcast(expansion.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    from .plans.query import expand_fuzzy
+
+    b = _bm25_base(spark, sf_dir)
+    return _expansion_topk(spark, b, expand_fuzzy(
+        b.dictionary, FUZZY_Q, max_edits=MAX_EDITS, prefix_len=0,
+        max_expansions=MAX_FUZZY_EXP))
 
 
-SQL_FUZZY_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_FUZZY_SEARCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE levenshtein(d.term, '{FUZZY_Q}') <= {MAX_EDITS}
     ORDER BY levenshtein(d.term, '{FUZZY_Q}') ASC, d.df DESC, d.term ASC
     LIMIT {MAX_FUZZY_EXP}
@@ -2306,52 +2217,17 @@ MLT_SEED, MLT_TERMS = 0, 5
 
 
 def q_more_like_this(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    mlt = (
-        postings.filter(F.col("doc_id") == MLT_SEED)
-        .join(dictionary, "term")
-        .withColumn("w", F.col("tf") * idf)
-        .orderBy(F.col("w").desc(), F.col("term").asc())
-        .limit(MLT_TERMS)
-        .withColumn("idf", idf)
-    )
-    matches = (
-        postings.filter(F.col("doc_id") != MLT_SEED)
-        .join(F.broadcast(mlt.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    from .plans.query import mlt_terms
+
+    b = _bm25_base(spark, sf_dir)
+    seed_terms = mlt_terms(b.postings, b.dictionary, MLT_SEED, b.n_docs,
+                           MLT_TERMS)
+    matches = _matches(b, _term_idf(spark, b, seed_terms),
+                       b.postings.filter(F.col("doc_id") != MLT_SEED))
+    return _ranked(_bm25_scores(matches, b.avgdl), "rank", "doc_id", "score")
 
 
-SQL_MORE_LIKE_THIS = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
+SQL_MORE_LIKE_THIS = f"""{SQL_BM25_BASE}
 q AS (
     SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
     FROM postings p
@@ -2391,53 +2267,19 @@ FACET_TERMS, FACET_K = ("data", "query", "scan"), 50
 
 
 def q_facet_counts(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in FACET_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    topk = (scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(FACET_K))
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    ranked = topk.withColumn("rank", F.row_number().over(win).cast("long"))
-    return (
-        ranked.join(docs.select("doc_id", "source", "lang"), "doc_id")
-        .groupBy("source", "lang")
-        .agg(F.count("*").cast("long").alias("n_docs"),
-             F.min("rank").cast("long").alias("best_rank"),
-             F.round(F.max("score"), 6).alias("top_score"))
-    )
+    from .plans.query import facet_counts
+
+    b = _bm25_base(spark, sf_dir)
+    ranked = _ranked(_bm25_or(spark, b, FACET_TERMS),
+                     "rank", "doc_id", "score", k=FACET_K)
+    # scores are already round(_, 6), so facet_counts' max(score) is
+    # the twin's round(max(score), 6)
+    return facet_counts(ranked, b.docs.select("doc_id", "source", "lang"),
+                        ["source", "lang"])
 
 
-SQL_FACET_COUNTS = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_FACET_COUNTS = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(FACET_TERMS)!r}
 ),
 scores AS (
@@ -2546,47 +2388,11 @@ ZONE_MIN_IMP = 20
 
 
 def q_zone_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.split(
-                F.trim(F.regexp_replace(F.lower(F.col("text")), _NORM_RE, " ")),
-                r"\s+",
-            )
-        ).alias("pos", "term"),
-    ).filter(F.col("term") != "")
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(
-        F.count("*").alias("tf"),
-        F.max(F.when(F.col("pos") < 8, 20).otherwise(10)).alias("imp"),
-    )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.filter(F.col("imp") >= ZONE_MIN_IMP)
-        .join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    b = _bm25_base(spark, sf_dir, zoned=True)
+    matches = _matches(b, _term_idf(spark, b, BM25_QUERY_TERMS),
+                       b.postings.filter(F.col("imp") >= ZONE_MIN_IMP))
+    return _ranked(_bm25_scores(matches, b.avgdl, _n_terms()),
+                   "rank", "doc_id", "n_terms", "score")
 
 
 SQL_ZONE_SEARCH = f"""
@@ -2614,9 +2420,7 @@ consts AS (
              / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
 ),
 dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(BM25_QUERY_TERMS)!r}
 ),
 scores AS (
@@ -2726,51 +2530,17 @@ SNIP_TERMS, SNIP_WIDTH, SNIP_K = ("hash", "join"), 12, 10
 def q_snippets(spark, sf_dir):
     from .operators.phrase import snippet_windows, token_positions
 
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in SNIP_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    topk = scores.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()).limit(SNIP_K)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    ranked = (topk.withColumn("rank", F.row_number().over(win).cast("long"))
-              .select("rank", "doc_id", "score"))
-    snips = snippet_windows(token_positions(docs), ranked.select("doc_id"),
+    b = _bm25_base(spark, sf_dir)
+    ranked = _ranked(_bm25_or(spark, b, SNIP_TERMS),
+                     "rank", "doc_id", "score", k=SNIP_K)
+    snips = snippet_windows(token_positions(b.docs), ranked.select("doc_id"),
                             list(SNIP_TERMS), width=SNIP_WIDTH)
     return ranked.join(snips, "doc_id").select(
         "rank", "doc_id", "score", "win_start", "n_hits")
 
 
-SQL_SNIPPETS = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_SNIPPETS = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(SNIP_TERMS)!r}
 ),
 scores AS (
@@ -2840,33 +2610,11 @@ PAGE_TERMS, PAGE_K = ("vector", "merge"), 10
 
 
 def q_search_after(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in PAGE_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    b = _bm25_base(spark, sf_dir)
+    scores = _bm25_or(spark, b, PAGE_TERMS)
     cur = (
-        scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(PAGE_K)
-        .withColumn("_rn", F.row_number().over(win))
-        .filter(F.col("_rn") == PAGE_K)
+        _ranked(scores, "rank", "doc_id", "score", k=PAGE_K)
+        .filter(F.col("rank") == PAGE_K)
         .select(F.col("score").alias("cs"), F.col("doc_id").alias("cd"))
     )
     page2 = (
@@ -2875,28 +2623,12 @@ def q_search_after(spark, sf_dir):
                     | ((F.col("score") == F.col("cs"))
                        & (F.col("doc_id") > F.col("cd"))))
         .select("doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(PAGE_K)
     )
-    return (
-        page2.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    return _ranked(page2, "rank", "doc_id", "score", k=PAGE_K)
 
 
-SQL_SEARCH_AFTER = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_SEARCH_AFTER = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(PAGE_TERMS)!r}
 ),
 scores AS (
@@ -2943,31 +2675,15 @@ EXPLAIN_TERMS = ("data", "query")
 
 
 def q_explain(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(
-        F.count("*").cast("long").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(
-        F.count("*").cast("long").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in EXPLAIN_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
+    b = _bm25_base(spark, sf_dir)
+    tdf = _term_idf(spark, b, EXPLAIN_TERMS)
     matches = (
-        postings.join(F.broadcast(tdf.select("term", "df", "idf")), "term")
-        .join(dl, "doc_id")
+        b.postings.join(F.broadcast(tdf.select("term", "df", "idf")), "term")
+        .join(b.dl, "doc_id")
     )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    top1 = (scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    w = _bm25_w(b.avgdl)
+    top1 = (_bm25_scores(matches, b.avgdl)
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(1).select("doc_id"))
     return (
         matches.join(F.broadcast(top1), "doc_id", "left_semi")
@@ -2978,16 +2694,7 @@ def q_explain(spark, sf_dir):
     )
 
 
-SQL_EXPLAIN = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
+SQL_EXPLAIN = f"""{SQL_BM25_BASE}
 q AS (
     SELECT d.term, d.df,
            ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
@@ -3030,57 +2737,20 @@ COLLAPSE_TERMS, COLLAPSE_K = ("stream", "window"), 10
 
 
 def q_collapse(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in COLLAPSE_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    cand = docs.select("doc_id", "source").join(scores, "doc_id")
+    b = _bm25_base(spark, sf_dir)
+    cand = b.docs.select("doc_id", "source").join(
+        _bm25_or(spark, b, COLLAPSE_TERMS), "doc_id")
     best = (
         cand.withColumn("_rn", F.row_number().over(
             Window.partitionBy("source").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc())))
         .filter(F.col("_rn") == 1)
     )
-    topk = best.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()).limit(COLLAPSE_K)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "source", "score")
-    )
+    return _ranked(best, "rank", "doc_id", "source", "score", k=COLLAPSE_K)
 
 
-SQL_COLLAPSE = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_COLLAPSE = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(COLLAPSE_TERMS)!r}
 ),
 scores AS (
@@ -3166,54 +2836,17 @@ def q_synonym_search(spark, sf_dir):
     from .text.normalize import expand_synonyms
 
     expanded = expand_synonyms(list(SYN_QUERY_TERMS), SYN_MAP)
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in expanded], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    b = _bm25_base(spark, sf_dir)
+    return _ranked(_bm25_or(spark, b, expanded, _n_terms()),
+                   "rank", "doc_id", "n_terms", "score")
 
 
 def _sql_synonym_search() -> str:
     from .text.normalize import expand_synonyms
 
     expanded = tuple(expand_synonyms(list(SYN_QUERY_TERMS), SYN_MAP))
-    return f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+    return f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {expanded!r}
 ),
 scores AS (
@@ -3247,51 +2880,15 @@ FILTER_TERMS, FILTER_LANG = ("batch", "merge"), "en"
 
 
 def q_filtered_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in FILTER_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    allowed = docs.filter(F.col("lang") == FILTER_LANG).select("doc_id")
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-        .join(allowed, "doc_id", "left_semi")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    b = _bm25_base(spark, sf_dir)
+    allowed = b.docs.filter(F.col("lang") == FILTER_LANG).select("doc_id")
+    matches = _matches(b, _term_idf(spark, b, FILTER_TERMS)).join(
+        allowed, "doc_id", "left_semi")
+    return _ranked(_bm25_scores(matches, b.avgdl), "rank", "doc_id", "score")
 
 
-SQL_FILTERED_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_FILTERED_SEARCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(FILTER_TERMS)!r}
 ),
 scores AS (
@@ -3328,8 +2925,6 @@ MIXED_PHRASE, MIXED_TERM = ("query", "scan"), "merge"
 
 
 def q_mixed_search(spark, sf_dir):
-    import math as _math
-
     from .operators.phrase import phrase_match, token_positions
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -3340,38 +2935,24 @@ def q_mixed_search(spark, sf_dir):
     # phrase clause: virtual-term BM25 over adjacency starts
     matched = phrase_match(pos, list(MIXED_PHRASE))
     df_p = matched.count()
-    idf_p = _math.log((n_docs - df_p + 0.5) / (df_p + 0.5) + 1.0)
-    wp = (F.col("ptf") * F.lit(K1 + 1.0)) / (
-        F.col("ptf") + F.lit(K1) * (F.lit(1.0 - B)
-                                    + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    phrase_part = (matched.join(dl, "doc_id")
-                   .select("doc_id", (F.lit(idf_p) * wp).alias("score")))
+    idf_p = math.log((n_docs - df_p + 0.5) / (df_p + 0.5) + 1.0)
+    phrase_part = (
+        matched.join(dl, "doc_id")
+        .select("doc_id", (F.lit(idf_p) * _bm25_w(avgdl, "ptf")).alias("score")))
     # loose-term clause: plain BM25
     postings = pos.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
     tdf = (dictionary.filter(F.col("term") == MIXED_TERM)
-           .withColumn("idf", F.log(
-               (F.lit(float(n_docs)) - F.col("df") + 0.5)
-               / (F.col("df") + 0.5) + 1.0)))
-    wt = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
+           .withColumn("idf", _idf(n_docs)))
     term_part = (
         postings.join(F.broadcast(tdf.select("term", "idf")), "term")
         .join(dl, "doc_id")
-        .select("doc_id", (F.col("idf") * wt).alias("score"))
+        .select("doc_id", (F.col("idf") * _bm25_w(avgdl)).alias("score"))
     )
     total = (term_part.unionByName(phrase_part)
              .groupBy("doc_id")
              .agg(F.round(F.sum("score"), 6).alias("score")))
-    topk = total.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    return _ranked(total, "rank", "doc_id", "score")
 
 
 SQL_MIXED_SEARCH = f"""
@@ -3403,9 +2984,7 @@ phrase_part AS (
 ),
 postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM pos2 GROUP BY 1, 2),
 dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+{SQL_IDF_CTE}
     WHERE d.term = '{MIXED_TERM}'
 ),
 term_part AS (
@@ -3444,35 +3023,14 @@ BOOST_TERMS = {"batch": 3.0, "merge": 1.0}
 
 
 def q_boosted_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
+    b = _bm25_base(spark, sf_dir)
     terms = spark.createDataFrame(
         [(t, w) for t, w in sorted(BOOST_TERMS.items())],
         "term string, boost double")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0) * F.col("boost"))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score")
-    )
+    tdf = b.dictionary.join(F.broadcast(terms), "term").withColumn(
+        "idf", _idf(b.n_docs) * F.col("boost"))
+    return _ranked(_bm25_scores(_matches(b, tdf), b.avgdl),
+                   "rank", "doc_id", "score")
 
 
 def _sql_boost_case() -> str:
@@ -3481,16 +3039,7 @@ def _sql_boost_case() -> str:
     return f"CASE d.term {arms} ELSE 1.0 END"
 
 
-SQL_BOOSTED_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
+SQL_BOOSTED_SEARCH = f"""{SQL_BM25_BASE}
 q AS (
     SELECT d.term,
            ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
@@ -3527,53 +3076,17 @@ MSM_TERMS, MSM_MIN = ("batch", "merge", "scan"), 2
 
 
 def q_min_match(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in MSM_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
+    b = _bm25_base(spark, sf_dir)
     scores = (
-        matches.groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-             F.count("*").alias("_nt"))
+        _bm25_or(spark, b, MSM_TERMS, F.count("*").alias("_nt"))
         .filter(F.col("_nt") >= MSM_MIN)
         .select("doc_id", "score", F.col("_nt").cast("long").alias("n_terms"))
     )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "score", "n_terms")
-    )
+    return _ranked(scores, "rank", "doc_id", "score", "n_terms")
 
 
-SQL_MIN_MATCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_MIN_MATCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(MSM_TERMS)!r}
 ),
 scores AS (
@@ -3613,26 +3126,9 @@ def q_hybrid_rrf(spark, sf_dir):
     from .operators.similarity import with_cosine
     from .plans.hybrid import rrf_fuse, with_rank
 
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in HYBRID_TERMS], "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
+    b = _bm25_base(spark, sf_dir)
     lex = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("idf") * w), 6).alias("score"))
+        _bm25_or(spark, b, HYBRID_TERMS)
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(HYBRID_DEPTH)
     )
@@ -3658,19 +3154,8 @@ def q_hybrid_rrf(spark, sf_dir):
     )
 
 
-SQL_HYBRID_RRF = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_HYBRID_RRF = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(HYBRID_TERMS)!r}
 ),
 lex AS (
@@ -3790,54 +3275,15 @@ REGEX_Q, REGEX_MAX_EXP = "s.*a.*", 3
 
 
 def q_regex_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    expansion = (
-        dictionary.filter(F.col("term").rlike(f"^(?:{REGEX_Q})$"))
-        .orderBy(F.col("df").desc(), F.col("term").asc())
-        .limit(REGEX_MAX_EXP)
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    matches = (
-        postings.join(F.broadcast(expansion.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    from .plans.query import expand_regex
+
+    b = _bm25_base(spark, sf_dir)
+    return _expansion_topk(
+        spark, b, expand_regex(b.dictionary, REGEX_Q, REGEX_MAX_EXP))
 
 
-SQL_REGEX_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_REGEX_SEARCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE regexp_full_match(d.term, '{REGEX_Q}')
     ORDER BY d.df DESC, d.term ASC
     LIMIT {REGEX_MAX_EXP}
@@ -3875,62 +3321,20 @@ W_SUFFIX, W_MAX_EXP = "er", 2
 
 
 def q_wildcard_search(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    # the reversed-dictionary expansion shape (plans/rank.py
-    # reversed_dictionary): '*er' becomes StartsWith('re') on rterm —
-    # on the catalog's persisted rterm-sorted table this prunes row
-    # groups; here the projection is in-memory so the result (not the
-    # pushdown) is what the oracle checks
-    rdict = dictionary.select(
-        F.reverse(F.col("term")).alias("rterm"), "term", "df")
-    expansion = (
-        rdict.filter(F.col("rterm").startswith(W_SUFFIX[::-1]))
-        .select("term", "df")
-        .orderBy(F.col("df").desc(), F.col("term").asc())
-        .limit(W_MAX_EXP)
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    matches = (
-        postings.join(F.broadcast(expansion.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+    from .plans.rank import expand_wildcard, reversed_dictionary
+
+    b = _bm25_base(spark, sf_dir)
+    # the reversed-dictionary expansion shape: '*er' becomes
+    # StartsWith('re') on rterm — on the catalog's persisted
+    # rterm-sorted table this prunes row groups; here the projection is
+    # in-memory so the result (not the pushdown) is what the oracle checks
+    return _expansion_topk(spark, b, expand_wildcard(
+        b.dictionary, "*" + W_SUFFIX, W_MAX_EXP,
+        rdictionary=reversed_dictionary(b.dictionary)))
 
 
-SQL_WILDCARD_SEARCH = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_WILDCARD_SEARCH = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term LIKE '%{W_SUFFIX}'
     ORDER BY d.df DESC, d.term ASC
     LIMIT {W_MAX_EXP}
@@ -3969,30 +3373,19 @@ LM_TERMS, LM_MU = ("stream", "window"), 2000.0
 
 
 def q_lm_dirichlet(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    total = float(toks.count())
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    pruned = postings.filter(F.col("term").isin(list(LM_TERMS)))
+    b = _bm25_base(spark, sf_dir)
+    total = float(b.n_tokens)
+    pruned = b.postings.filter(F.col("term").isin(list(LM_TERMS)))
     cf = pruned.groupBy("term").agg(F.sum("tf").alias("cf"))
-    matches = (pruned.join(F.broadcast(cf), "term").join(dl, "doc_id"))
+    matches = (pruned.join(F.broadcast(cf), "term").join(b.dl, "doc_id"))
     addend = (
         F.log(F.lit(1.0) + F.col("tf")
               / (F.lit(LM_MU) * (F.col("cf") / F.lit(total))))
         + F.log(F.lit(LM_MU) / (F.col("dl") + F.lit(LM_MU)))
     )
     scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(addend), 6).alias("score"),
-        F.count("*").cast("long").alias("n_terms"),
-    )
-    topk = scores.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "n_terms", "score")
-    )
+        F.round(F.sum(addend), 6).alias("score"), _n_terms())
+    return _ranked(scores, "rank", "doc_id", "n_terms", "score")
 
 
 SQL_LM_DIRICHLET = f"""
@@ -4033,29 +3426,9 @@ TV_DOC = 7
 
 
 def q_term_vectors(spark, sf_dir):
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") == TV_DOC)
-    pos = (
-        docs.select(
-            "doc_id",
-            F.posexplode(
-                F.split(
-                    F.trim(F.regexp_replace(
-                        F.lower(F.col("text")), _NORM_RE, " ")),
-                    r"\s+",
-                )
-            ).alias("pos", "term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    return (
-        pos.groupBy("term")
-        .agg(
-            F.count("*").cast("long").alias("tf"),
-            F.sort_array(F.collect_list(F.col("pos").cast("long")))
-            .alias("positions"),
-        )
-        .select("term", "tf", "positions")
-    )
+    from .plans.rank import term_vector
+
+    return term_vector(_positions(_docs(spark, sf_dir)), TV_DOC)
 
 
 SQL_TERM_VECTORS = f"""
@@ -4093,41 +3466,13 @@ RS_T0, RS_T1, RS_N, RS_W = "hash", "join", 50, 2.0
 
 
 def q_rescore(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    pos = (
-        docs.select(
-            "doc_id",
-            F.posexplode(
-                F.split(
-                    F.trim(F.regexp_replace(
-                        F.lower(F.col("text")), _NORM_RE, " ")),
-                    r"\s+",
-                )
-            ).alias("pos", "term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    toks = pos.select("doc_id", "term")
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    q_terms = (
-        dictionary.filter(F.col("term").isin([RS_T0, RS_T1]))
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
+    b = _bm25_base(spark, sf_dir, zoned=True)   # for the positions only
+    pos = b.toks
+    q_terms = (b.dictionary.filter(F.col("term").isin([RS_T0, RS_T1]))
+               .withColumn("idf", _idf(b.n_docs)))
     first = (
-        postings.join(F.broadcast(q_terms.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("idf") * w), 6).alias("score_first"))
+        _bm25_scores(_matches(b, q_terms), b.avgdl)
+        .withColumnRenamed("score", "score_first")
         .orderBy(F.col("score_first").desc(), F.col("doc_id").asc())
         .limit(RS_N)
     )
@@ -4145,12 +3490,7 @@ def q_rescore(spark, sf_dir):
             F.col("score_first")
             + F.lit(RS_W) * F.log(F.lit(1.0) + F.col("ptf")), 6))
     )
-    topk = cand.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "ptf", "score_first", "score")
-    )
+    return _ranked(cand, "rank", "doc_id", "ptf", "score_first", "score")
 
 
 SQL_RESCORE = f"""
@@ -4164,9 +3504,7 @@ consts AS (
              / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
 ),
 dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+{SQL_IDF_CTE}
     WHERE d.term IN ('{RS_T0}', '{RS_T1}')
 ),
 first AS (
@@ -4215,31 +3553,14 @@ BOOL_POS, BOOL_NEG = ("data", "stream"), "merge"
 
 
 def q_bool_expr(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
+    b = _bm25_base(spark, sf_dir)
     all_terms = [BOOL_POS[0], BOOL_POS[1], BOOL_NEG]
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    q_terms = (
-        dictionary.filter(F.col("term").isin(all_terms))
-        .withColumn("idf", F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5) + 1.0))
-    )
-    matches = (
-        postings.filter(F.col("term").isin(all_terms))
-        .join(F.broadcast(q_terms.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
+    q_terms = (b.dictionary.filter(F.col("term").isin(all_terms))
+               .withColumn("idf", _idf(b.n_docs)))
+    matches = _matches(b, q_terms,
+                       b.postings.filter(F.col("term").isin(all_terms)))
     contrib = F.when(F.col("term").isin(list(BOOL_POS)),
-                     F.col("idf") * w).otherwise(F.lit(0.0))
+                     F.col("idf") * _bm25_w(b.avgdl)).otherwise(F.lit(0.0))
     per_doc = matches.groupBy("doc_id").agg(
         F.round(F.sum(contrib), 6).alias("score"),
         F.max(F.when(F.col("term") == BOOL_POS[0], 1).otherwise(0)).alias("m0"),
@@ -4248,29 +3569,12 @@ def q_bool_expr(spark, sf_dir):
     )
     qualified = per_doc.filter(
         ((F.col("m0") == 1) | (F.col("m1") == 1)) & (F.col("mn") == 0))
-    topk = (qualified.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(10))
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .withColumn("n_pos", (F.col("m0") + F.col("m1")).cast("long"))
-        .select("rank", "doc_id", "n_pos", "score")
-    )
+    n_pos = (F.col("m0") + F.col("m1")).cast("long").alias("n_pos")
+    return _ranked(qualified, "rank", "doc_id", n_pos, "score")
 
 
-SQL_BOOL_EXPR = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_BOOL_EXPR = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN ('{BOOL_POS[0]}', '{BOOL_POS[1]}', '{BOOL_NEG}')
 ),
 per_doc AS (
@@ -4321,52 +3625,25 @@ LIMIT 10
 DATEFACET_TERMS = ("query", "window")
 
 
-def q_date_facet(spark, sf_dir):
-    from .plans.query import facet_date_histogram
-
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in DATEFACET_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    dims = docs.select(
+def _crawl_dates(docs):
+    """(doc_id, crawl_date): a deterministic date in 2024 per doc."""
+    return docs.select(
         "doc_id",
         F.date_add(F.to_date(F.lit("2024-01-01")),
                    (F.col("doc_id") % 365).cast("int")).alias("crawl_date"))
-    return facet_date_histogram(scores, dims, ts_col="crawl_date",
+
+
+def q_date_facet(spark, sf_dir):
+    from .plans.query import facet_date_histogram
+
+    b = _bm25_base(spark, sf_dir)
+    return facet_date_histogram(_bm25_or(spark, b, DATEFACET_TERMS),
+                                _crawl_dates(b.docs), ts_col="crawl_date",
                                 granularity="month")
 
 
-SQL_DATE_FACET = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_DATE_FACET = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(DATEFACET_TERMS)!r}
 ),
 scores AS (
@@ -4408,57 +3685,21 @@ DIVERSE_TERMS, DIVERSE_CAP, DIVERSE_K = ("data", "stream"), 2, 10
 
 
 def q_diversified_topk(spark, sf_dir):
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in DIVERSE_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    cand = docs.select("doc_id", "source").join(scores, "doc_id")
+    b = _bm25_base(spark, sf_dir)
+    cand = b.docs.select("doc_id", "source").join(
+        _bm25_or(spark, b, DIVERSE_TERMS), "doc_id")
     capped = (
         cand.withColumn("slot", F.row_number().over(
             Window.partitionBy("source").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc())).cast("long"))
         .filter(F.col("slot") <= DIVERSE_CAP)
     )
-    topk = capped.orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()).limit(DIVERSE_K)
-    win = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    return (
-        topk.withColumn("rank", F.row_number().over(win).cast("long"))
-        .select("rank", "doc_id", "source", "slot", "score")
-    )
+    return _ranked(capped, "rank", "doc_id", "source", "slot", "score",
+                   k=DIVERSE_K)
 
 
-SQL_DIVERSIFIED_TOPK = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_DIVERSIFIED_TOPK = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(DIVERSE_TERMS)!r}
 ),
 scores AS (
@@ -4511,55 +3752,20 @@ _RECENCY_LAM = math.log(0.5) / RECENCY_HL
 def q_recency_topk(spark, sf_dir):
     from .plans.query import recency_boosted_topk
 
-    docs = _docs(spark, sf_dir)
-    toks = _tokens(docs)
-    n_docs = docs.count()
-    postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    avgdl = toks.count() / n_docs
-    dictionary = postings.groupBy("term").agg(F.count("*").alias("df"))
-    terms = spark.createDataFrame([(t,) for t in RECENCY_TERMS],
-                                  "term string")
-    tdf = dictionary.join(F.broadcast(terms), "term").withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                     / (F.col("df") + 0.5) + 1.0))
-    matches = (
-        postings.join(F.broadcast(tdf.select("term", "idf")), "term")
-        .join(dl, "doc_id")
-    )
-    w = (F.col("tf") * F.lit(K1 + 1.0)) / (
-        F.col("tf") + F.lit(K1) * (F.lit(1.0 - B)
-                                   + F.lit(B) * (F.col("dl") / F.lit(avgdl)))
-    )
-    scores = matches.groupBy("doc_id").agg(
-        F.round(F.sum(F.col("idf") * w), 6).alias("score"))
-    dims = docs.select(
-        "doc_id",
-        F.date_add(F.to_date(F.lit("2024-01-01")),
-                   (F.col("doc_id") % 365).cast("int")).alias("crawl_date"))
-    docs_url = docs.select(
+    b = _bm25_base(spark, sf_dir)
+    docs_url = b.docs.select(
         "doc_id",
         F.concat(F.lit("https://"), F.col("source"), F.lit("/doc/"),
                  F.col("doc_id").cast("string")).alias("url"))
-    return recency_boosted_topk(scores, dims, docs_url, k=10,
+    return recency_boosted_topk(_bm25_or(spark, b, RECENCY_TERMS),
+                                _crawl_dates(b.docs), docs_url, k=10,
                                 ts_col="crawl_date",
                                 origin=RECENCY_ORIGIN,
                                 half_life_days=RECENCY_HL)
 
 
-SQL_RECENCY_TOPK = f"""
-WITH {SQL_TOKS},
-postings AS (SELECT term, doc_id, count(*)::BIGINT AS tf FROM toks2 GROUP BY 1, 2),
-dl AS (SELECT doc_id, count(*)::BIGINT AS dl FROM toks2 GROUP BY 1),
-consts AS (
-    SELECT (SELECT count(*) FROM documents)::DOUBLE AS n_docs,
-           (SELECT count(*) FROM toks2)::DOUBLE
-             / (SELECT count(*) FROM documents)::DOUBLE AS avgdl
-),
-dict AS (SELECT term, count(*)::BIGINT AS df FROM postings GROUP BY 1),
-q AS (
-    SELECT d.term, ln((c.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0) AS idf
-    FROM dict d, consts c
+SQL_RECENCY_TOPK = f"""{SQL_BM25_BASE}
+{SQL_IDF_CTE}
     WHERE d.term IN {tuple(RECENCY_TERMS)!r}
 ),
 scores AS (
@@ -4656,14 +3862,10 @@ WHERE (NOT isb) OR n_matched = need
 
 
 def queries() -> dict:
-    # Registration order rotated in round 6 (VERDICT r5 item #2): the
-    # driver's correctness record holds at most 50 rows in registration
-    # order, so under q01-first ordering the q52-q79 search-language
-    # family could never earn a driver row.  q52-q79 register FIRST
-    # this round; q01-q22 still fit in the 50-row window behind them,
-    # and q24-q51 (all hash-green in CORRECTNESS_r05) stay covered by
-    # the driver-mirror gate (tools/check_oracle.py).  Nothing about
-    # any query's plan or oracle SQL changes — only dict order.
+    # tools/check_oracle.py (the DuckDB mirror gate, run at sf0.01 and
+    # sf0.001) is the permanent coverage of q52-q79: the driver's
+    # correctness record keeps only its first 50 rows.  The names and
+    # their order are pinned by tests/test_entry_contract.py.
     return {
         "q52_fuzzy_search": q_fuzzy_search,
         "q53_more_like_this": q_more_like_this,

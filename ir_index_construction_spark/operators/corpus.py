@@ -62,22 +62,6 @@ def doc_meta_table(with_ids: DataFrame) -> DataFrame:
         F.regexp_extract("url", DOMAIN_RE, 1).alias("source"))
 
 
-def clean_corpus(documents: DataFrame) -> DataFrame:
-    """defrag + filter + window dedup (first occurrence per url by
-    warc_ts).  Kept for incremental/streaming micro-batches where the
-    input is small; the batch build uses the fused single-shuffle path
-    in ``ingest`` instead."""
-    from pyspark.sql.window import Window
-
-    cleaned = defrag_and_filter(documents)
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").asc(), F.col("html").asc())
-    return (
-        cleaned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 class _IdPassHandle:
     """Owns the id pass's persisted frames; unpersist() frees them all.
     ``n_docs`` is the number of ids the pass assigned (the row count of

@@ -197,7 +197,7 @@ def test_segmented_driver_route_matches_spark_plan(spark, seg_env):
 
     def pages(budget):
         svc = _service(spark, cat, budget)
-        svc._refresh()                 # snapshot load (doc_meta check)
+        svc._refresh()                 # snapshot load
         sc = spark.sparkContext
         sc.setJobGroup(f"segments-route-{budget}", "wand route")
         try:

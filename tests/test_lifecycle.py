@@ -272,3 +272,49 @@ def test_cli_guards_and_doc_meta_coverage_warning(spark):
     orphan = ids(0, 1, 99)
     warn = m.doc_meta_coverage_warning(orphan, ids(0, 1, 2), 3)
     assert warn and "2 of 3" in warn
+
+
+def test_doc_meta_coverage_checked_by_metadata_queries_only(
+        spark, tmp_path, monkeypatch, capsys):
+    """The doc_meta coverage check (four Spark jobs) runs only for the
+    metadata queries that lose docs without metadata, once per snapshot:
+    plain queries never pay it, and a partial sidecar still warns."""
+    cat = Catalog(str(tmp_path / "cat"))
+    IndexBuilder(cat, small_scale(), n_batches=1).build(
+        spark.createDataFrame(make_corpus(120), DOCUMENTS))
+    assert cat.table_exists("doc_meta")
+
+    spec = importlib.util.spec_from_file_location(
+        "submit_query_meta_check",
+        Path(__file__).resolve().parent.parent / "tools" / "submit_query.py")
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    calls = []
+    real = m.doc_meta_coverage_warning
+
+    def counting(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(m, "doc_meta_coverage_warning", counting)
+
+    svc = m.QueryService(spark, cat)
+    assert svc.run(QUERY, 10, "wand", False).collect()
+    assert calls == []
+    svc.run(QUERY, 10, "wand", False, recency=45.0).collect()
+    svc.run(QUERY, 10, "wand", False, date_facet="month").collect()
+    svc.run(QUERY, 10, "exhaustive", False,
+            meta_filter={"lang": "en"}).collect()
+    assert len(calls) == 1
+    assert "doc_meta covers only" not in capsys.readouterr().err
+
+    # a new snapshot whose sidecar misses half the docs
+    meta = cat.read(spark, "doc_meta")
+    kept = meta.filter(F.col("doc_id") % 2 == 0).collect()
+    cat.write(spark.createDataFrame(kept, meta.schema), "doc_meta")
+    assert svc.run(QUERY, 10, "wand", False).collect()
+    assert len(calls) == 1
+    svc.run(QUERY, 10, "wand", False, recency=45.0).collect()
+    svc.run(QUERY, 10, "wand", False, date_facet="month").collect()
+    assert len(calls) == 2
+    assert "doc_meta covers only" in capsys.readouterr().err

@@ -3,6 +3,8 @@ entry on Spark AND its oracle_sql() on DuckDB at the given sf dir,
 compare row-count + schema-ish + order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+
+Exits 1 if any query fails or if a named query is not in queries().
 """
 
 from __future__ import annotations
@@ -31,57 +33,73 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    import __spark_entry__ as entry
-    from ir_index_construction_spark.session import get_spark
-
-    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=8)
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per testdata table."""
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def check_query(spark, con, sf_dir: str, fn, sql: str | None) -> tuple:
+    """Run one entry on Spark and, when it has an oracle, its SQL on
+    ``con``.  Returns (ok, message): ok is False on an error or any
+    schema / row-count / value mismatch; a query without SQL is checked
+    for rows only."""
+    try:
+        got = normalize(fn(spark, sf_dir).toPandas())
+    except Exception as e:
+        return False, f"spark error {e}"
+    if sql is None:
+        return True, f"{len(got)} rows (rows-only check)"
+    try:
+        want = normalize(con.execute(sql).df())
+    except Exception as e:
+        return False, f"duckdb error {e}"
+    if list(got.columns) != list(want.columns):
+        return False, (f"schema mismatch {list(got.columns)} "
+                       f"vs {list(want.columns)}")
+    if len(got) != len(want):
+        return False, f"row count {len(got)} vs {len(want)}"
+    if not got.equals(want):
+        neq = (got != want).any(axis=1)
+        return False, (f"{int(neq.sum())}/{len(got)} rows differ\n"
+                       f"{pd.concat([got[neq].head(3), want[neq].head(3)])}")
+    return True, f"{len(got)} rows match"
+
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
+
+    import __spark_entry__ as entry
+    from ir_index_construction_spark.session import get_spark
 
     qs, sqls = entry.queries(), entry.oracle_sql()
+    unknown = [n for n in only if n not in qs]
+    if unknown:
+        print(f"unknown query names: {unknown}")
+        sys.exit(1)
+
+    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=8)
+    con = duckdb_views(sf_dir)
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        try:
-            got = normalize(fn(spark, sf_dir).toPandas())
-        except Exception as e:
-            failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error {e}")
-            continue
-        if name not in sqls:
-            print(f"rows  {name}: {len(got)} rows (rows-only check)")
-            continue
-        try:
-            want = normalize(con.execute(sqls[name]).df())
-        except Exception as e:
-            failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"FAIL  {name}: duckdb error {e}")
-            continue
-        if list(got.columns) != list(want.columns):
-            failures.append((name, f"schema {list(got.columns)} vs {list(want.columns)}"))
-            print(f"FAIL  {name}: schema mismatch {list(got.columns)} vs {list(want.columns)}")
-            continue
-        if len(got) != len(want):
-            failures.append((name, f"rows {len(got)} vs {len(want)}"))
-            print(f"FAIL  {name}: row count {len(got)} vs {len(want)}")
-            continue
-        if not got.equals(want):
-            neq = (got != want).any(axis=1)
-            failures.append((name, f"{int(neq.sum())} differing rows"))
-            print(f"FAIL  {name}: {int(neq.sum())}/{len(got)} rows differ")
-            print(pd.concat([got[neq].head(3), want[neq].head(3)]))
-            continue
-        print(f"OK    {name}: {len(got)} rows match")
+        checked += 1
+        ok, msg = check_query(spark, con, sf_dir, fn, sqls.get(name))
+        if ok:
+            print(f"{'OK  ' if name in sqls else 'rows'}  {name}: {msg}")
+        else:
+            failures.append(name)
+            print(f"FAIL  {name}: {msg}")
     print()
+    print(f"{checked} queries checked")
     if failures:
-        print(f"{len(failures)} FAILURES: {[f[0] for f in failures]}")
+        print(f"{len(failures)} FAILURES: {failures}")
         sys.exit(1)
     print("all queries match")
 

@@ -68,7 +68,8 @@ def doc_meta_coverage_warning(doc_meta_df, docs_df, n_docs) -> str | None:
     drains).  The metadata modes semi-join / inner-join on doc_meta, so
     every metadata-less doc silently vanishes from --filter /
     --facet-date / --recency results while plain queries still return
-    it.  One cheap count per snapshot refresh makes that gap loud.
+    it.  One count per snapshot, run by its first metadata query, makes
+    that gap loud.
     Only doc_meta ids that are in ``docs_df`` count (a semi-join), so
     orphan meta rows cannot mask missing ones.  Returns the warning
     text, or None when coverage is complete."""
@@ -168,12 +169,10 @@ class QueryService:
                       "doc_meta"):
                 if t in snaps:
                     self._f[t] = self.cat.read(self.spark, t, snaps[t])
-            if "doc_meta" in self._f:
-                warn = doc_meta_coverage_warning(self._f["doc_meta"],
-                                                 self._f["docs"],
-                                                 self._f["n_docs"])
-                if warn:
-                    print(warn, file=sys.stderr)
+            # doc_meta coverage is checked by the first metadata query
+            # of this snapshot (see run): only those queries lose docs
+            # without metadata, and the check costs four Spark jobs
+            self._f["meta_checked"] = False
             # the driver route's view of the same snapshot: its live
             # files, opened as pyarrow datasets once per snapshot
             local = ("index", "dictionary", "docs")
@@ -228,12 +227,18 @@ class QueryService:
         # served from the catalog's own doc_meta sidecar (warc_ts/lang/
         # source, written with docs at build + streaming, purged with
         # them) — no caller-supplied dims frame
-        if (meta_filter or date_facet or recency is not None) \
-                and "doc_meta" not in f:
-            raise SystemExit(
-                "metadata queries need the doc_meta table: rebuild the "
-                "catalog (or drain one micro-batch) with a builder that "
-                "writes the crawl-metadata sidecar")
+        if meta_filter or date_facet or recency is not None:
+            if "doc_meta" not in f:
+                raise SystemExit(
+                    "metadata queries need the doc_meta table: rebuild the "
+                    "catalog (or drain one micro-batch) with a builder that "
+                    "writes the crawl-metadata sidecar")
+            if not f["meta_checked"]:
+                f["meta_checked"] = True
+                warn = doc_meta_coverage_warning(f["doc_meta"], f["docs"],
+                                                 f["n_docs"])
+                if warn:
+                    print(warn, file=sys.stderr)
         doc_filter = None
         if meta_filter:
             m = f["doc_meta"]
