@@ -1174,8 +1174,10 @@ LIMIT 10
 
 def q_wand_batch(spark, sf_dir):
     """A 3-query WORKLOAD (plain OR, boolean AND, duplicate-term) through
-    wand_topk_batch — ONE term-filtered index scan + one shard-scoring
-    job for all queries (operators/topk.py) — hash-checked against DuckDB
+    wand_topk_batch — ONE term-filtered index scan for all queries, its
+    rows scored and ranked on the driver when the union's postings fit
+    the driver-route budget (as at the gate's scales), else by one
+    shard-scoring plan (operators/topk.py) — hash-checked against DuckDB
     recomputing every query exhaustively and ranking per query_id."""
     from .operators.topk import wand_topk_batch
 

@@ -23,7 +23,8 @@ vectorized numpy.  Per shard, over a list of query specs:
      (bit-identical float sums to the oracle), then apply the AND
      filter, the search-after cursor and the shard top k by (score
      DESC, doc_id ASC).  The global merge is a TakeOrderedAndProject
-     (single query) or a per-query rank window (workload).
+     (single query) or a per-query rank window (workload); on the
+     driver routes, a numpy sort by the same keys.
 
 Why only one spec prunes: a workload's specs share each term's decode,
 so pruning would still decode the union of their selections and would
@@ -48,9 +49,23 @@ Boolean AND: no pruning (a seed theta over non-candidates could
 over-prune); candidates must match all distinct terms, and a term with
 zero global postings empties the result before any job launches.
 
-wand_topk_driver runs the same scorer on the driver, with no Spark
-job, for queries whose postings fit a budget (the query service's
-route for small queries).
+Routes by cost.  A query's postings (the summed df of its terms) are
+known after the idf lookup; when they are at most LOCAL_POSTINGS_BUDGET
+the same scorer runs on the driver, since a Spark plan's fixed cost
+(scheduling, exchanges, the Python-worker round trip) dwarfs scoring a
+few thousand postings:
+
+  * wand_topk_driver (the query service's route for a small single
+    query): pyarrow reads of the snapshot's files, no Spark job.
+  * wand_topk_batch: a workload whose union of terms fits the budget
+    runs 3 jobs (the idf lookup, none on an idf-cache hit; one Arrow
+    collect of its index rows; one of its urls) and returns a local
+    relation; over the budget it runs the Spark plan (idf lookup, then
+    the scan, shard exchange, rank window and broadcast url join when
+    the caller collects).
+
+wand_topk itself always runs the Spark plan.  Both routes of a call
+share the specs and the scorer, so their rows are identical.
 """
 
 from __future__ import annotations
@@ -66,11 +81,24 @@ from pyspark.sql.window import Window
 
 from ..config import BM25Config
 from ..functions.codec import bm25_tf_norm, decode_chunk
-from ..plans.query import empty_topk, query_term_idf, term_in
-from ..schemas import TOPK
+from ..plans.query import (
+    doc_id_in, empty_frame, empty_topk, query_term_idf, term_in)
+from ..schemas import TOPK, TOPK_BATCH
 from ..text.normalize import parse_query
 
 _LOCAL_SCHEMA = "doc_id long, score double"
+
+# Driver-route budget, read on every call: a plain WAND query in the
+# query service, or a wand_topk_batch workload, whose terms hold at
+# most this many postings (summed df; a workload's union of terms) is
+# scored on the driver; above it the Spark plan runs.
+# tools/route_crossover.py times both routes against the postings on a
+# synthetic 1M-doc catalog: at local[2] on a 4-vCPU VM the single-query
+# driver route takes under half the Spark plan's time up to 1M postings
+# and stays ahead to ~4M (README.md has the figures, batch ones too).
+# The benchmark's catalogs hold under 600 docs, so every benchmark
+# query and workload is in budget.
+LOCAL_POSTINGS_BUDGET = 1_000_000
 
 
 def _sparse_table(values: np.ndarray):
@@ -354,16 +382,17 @@ def make_shard_scorer(term_meta: dict, ordered_terms: list, k: int,
 
 def _query_specs(spark, dictionary, parsed: dict, n_docs: int,
                  avgdl: float, idf_cache: dict | None = None,
-                 boosts: dict | None = None) -> list:
-    """make_scorer specs for {query_id: (terms, is_bool)}: one idf
-    lookup for the union of the terms (query_term_idf: a Spark job over
-    a dictionary frame, none over a pyarrow dataset), then _specs.  An
-    empty corpus has no specs, and makes no lookup."""
+                 boosts: dict | None = None) -> tuple:
+    """(make_scorer specs, {term: (df, idf)}) for {query_id: (terms,
+    is_bool)}: one idf lookup for the union of the terms
+    (query_term_idf: a Spark job over a dictionary frame, none over a
+    pyarrow dataset), then _specs.  An empty corpus has no specs, and
+    makes no lookup."""
     union = sorted({t for terms, _ in parsed.values() for t in terms})
     if not union or n_docs == 0 or avgdl == 0:
-        return []
+        return [], {}
     tf_idf = query_term_idf(spark, dictionary, union, n_docs, cache=idf_cache)
-    return _specs(parsed, tf_idf, boosts)
+    return _specs(parsed, tf_idf, boosts), tf_idf
 
 
 def _specs(parsed: dict, tf_idf: dict, boosts: dict | None = None) -> list:
@@ -428,8 +457,8 @@ def wand_topk(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
     are BOTH (mult*idf)*tf_norm: scaling idf scales them together."""
     spark = index.sparkSession
     terms, is_bool = pre_parsed if pre_parsed is not None else parse_query(query)
-    specs = _query_specs(spark, dictionary, {None: (terms, is_bool)}, n_docs,
-                         avgdl, idf_cache, boosts)
+    specs, _ = _query_specs(spark, dictionary, {None: (terms, is_bool)},
+                            n_docs, avgdl, idf_cache, boosts)
     if not specs:
         return empty_topk(spark)
     _, ordered, term_meta, is_bool, _ = specs[0]
@@ -446,6 +475,16 @@ def wand_topk(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
         ).cast("int"))
         .select("rank", "doc_id", "url", "score")
     )
+
+
+def _score_by_shard(rows: pd.DataFrame, scorer) -> list:
+    """scorer(frame) for each shard's rows of ``rows``, index rows read
+    on the driver: what groupBy("shard").applyInPandas runs on
+    executors."""
+    shard = rows["shard"].to_numpy()
+    by_shard = np.argsort(shard, kind="stable")
+    cuts = np.flatnonzero(np.diff(shard[by_shard])) + 1
+    return [scorer(rows.iloc[i]) for i in np.split(by_shard, cuts) if len(i)]
 
 
 class DriverIndex:
@@ -503,11 +542,7 @@ def wand_topk_driver(spark, tables: DriverIndex, query: str, n_docs: int,
     scorer = make_shard_scorer(term_meta, ordered, k, is_bool, avgdl, bm25,
                                weighted=weighted, exclude_ids=exclude_ids,
                                bound_scale=bound_scale, after=after)
-    shard = rows["shard"].to_numpy()
-    by_shard = np.argsort(shard, kind="stable")
-    cuts = np.flatnonzero(np.diff(shard[by_shard])) + 1
-    local = [scorer(rows.iloc[i]) for i in np.split(by_shard, cuts)
-             if len(i)]
+    local = _score_by_shard(rows, scorer)
     if not local:
         return empty_topk(spark)
     doc_ids = np.concatenate([h["doc_id"].to_numpy() for h in local])
@@ -552,25 +587,76 @@ def make_batch_shard_scorer(specs: list, k: int, avgdl: float,
     return score_shard
 
 
+def _rank_per_query(hits: pd.DataFrame, k: int) -> pd.DataFrame:
+    """(query_id, rank, doc_id, score) of ``hits``' top k per query_id
+    by (score DESC, doc_id ASC): the Spark plan's row_number window,
+    in numpy."""
+    qids = pd.factorize(hits["query_id"])[0]
+    order = np.lexsort((hits["doc_id"].to_numpy(),
+                        -hits["score"].to_numpy(), qids))
+    qids = qids[order]
+    pos = np.arange(len(order))
+    first = np.r_[True, qids[1:] != qids[:-1]]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    keep = rank <= k
+    top = hits.iloc[order[keep]].reset_index(drop=True)
+    top.insert(1, "rank", rank[keep].astype(np.int32))
+    return top
+
+
+def _batch_on_driver(spark, rows: DataFrame, docs: DataFrame, scorer,
+                     k: int) -> DataFrame:
+    """wand_topk_batch's driver route: the workload's index rows and
+    then its ranked docs' urls in one Arrow collect each, the shard
+    scorer and the per-query rank on the driver.  Ranks are cut before
+    the url join, as in the Spark plan, so a ranked doc missing from
+    ``docs`` leaves the same gap.  Returns a one-partition local
+    relation: a caller's sort then needs no range exchange."""
+    hits = _score_by_shard(rows.toArrow().to_pandas(), scorer)
+    top = _rank_per_query(pd.concat(hits, ignore_index=True), k) \
+        if hits else ()
+    if len(top):
+        urls = docs.filter(doc_id_in(np.unique(top["doc_id"].to_numpy()))) \
+            .select("doc_id", "url").toArrow().to_pandas()
+        page = top.merge(urls, on="doc_id", how="inner")
+        if len(page):
+            return spark.createDataFrame(page[TOPK_BATCH.names],
+                                         TOPK_BATCH).coalesce(1)
+    return empty_frame(spark, TOPK_BATCH)
+
+
 def wand_topk_batch(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
                     queries: dict, n_docs: int, avgdl: float, k: int = 10,
                     bm25: BM25Config = BM25Config(), weighted: bool = False,
                     pre_parsed: dict | None = None,
                     idf_cache: dict | None = None,
                     exclude_ids=None) -> DataFrame:
-    """Evaluate a query WORKLOAD in one Spark job: (query_id, rank,
-    doc_id, url, score), rank-partitioned per query, each query's rows
-    bit-identical to its single-query wand_topk() result.
+    """Evaluate a query WORKLOAD: (query_id, rank, doc_id, url, score)
+    rows, each query's rows bit-identical to its single-query
+    wand_topk() result.
 
     Per-query wand_topk pays fixed per-job costs (driver scheduling,
     Python-worker round trip, broadcast) that dominate latency once the
     index is pruned well; on a 1000-executor cluster that is a whole
-    scheduling wave per query.  A training-data pipeline scoring 10^4 mined
-    queries needs the batch shape: ONE term-filtered index scan over the
-    union of all query terms, the same shard scorer with every query per
-    shard (terms decoded once, reused across queries), one window rank
-    over <= n_queries x n_shards x k rows, one broadcast url back-join,
-    and one dictionary lookup job for the union term set.
+    scheduling wave per query.  A training-data pipeline scoring 10^4
+    mined queries needs the batch shape: one dictionary lookup job for
+    the union term set, ONE term-filtered index scan over that union,
+    the same shard scorer with every query per shard (terms decoded
+    once, reused across queries), a per-query rank, one url lookup.
+
+    Two routes, chosen by the union's postings (summed df, known after
+    the idf lookup) against LOCAL_POSTINGS_BUDGET:
+      * in budget: 3 Spark jobs before this returns (the idf lookup,
+        none on an idf_cache hit; an Arrow collect of the union's index
+        rows; one of the ranked docs' urls); scoring and ranking run on
+        the driver and the rows come back as a one-partition local
+        relation, so a caller's sort and collect run 1 job;
+      * over budget: the idf lookup job, then a lazy plan the caller's
+        collect runs: pushed-down index scan -> groupBy(shard)
+        applyInPandas scorer -> rank window hash-partitioned on
+        query_id -> broadcast url back-join.
+    A workload with no scorable query returns an empty frame whose
+    collect runs no job.
 
     queries: {query_id: query_text}.  pre_parsed: {query_id: (terms,
     is_bool)} bypasses parse_query (unstemmed indexes).  Queries whose
@@ -581,14 +667,16 @@ def wand_topk_batch(index: DataFrame, dictionary: DataFrame, docs: DataFrame,
     parsed = {qid: (pre_parsed[qid] if pre_parsed and qid in pre_parsed
                     else parse_query(text))
               for qid, text in queries.items()}
-    specs = _query_specs(spark, dictionary, parsed, n_docs, avgdl, idf_cache)
+    specs, tf_idf = _query_specs(spark, dictionary, parsed, n_docs, avgdl,
+                                 idf_cache)
     if not specs:
-        return spark.createDataFrame([], "query_id string, rank int, doc_id"
-                                         " long, url string, score double")
+        return empty_frame(spark, TOPK_BATCH)
     needed = sorted({t for _, ordered, *_ in specs for t in ordered})
     rows = index.filter(term_in(needed))
     scorer = make_batch_shard_scorer(specs, k, avgdl, bm25, weighted=weighted,
                                      exclude_ids=exclude_ids)
+    if sum(tf_idf[t][0] for t in needed) <= LOCAL_POSTINGS_BUDGET:
+        return _batch_on_driver(spark, rows, docs, scorer, k)
     local = rows.groupBy("shard").applyInPandas(scorer, _BATCH_LOCAL_SCHEMA)
     win = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())

@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructType
 from pyspark.sql.window import Window
 
 from ..config import BM25Config
@@ -35,15 +36,22 @@ from ..text.normalize import parse_query
 import math
 
 
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of ``schema`` (string and numeric fields) that
+    collects with no Spark job: a one-row Arrow local relation limited
+    to none, which the optimizer folds into an empty local table scan.
+    ``createDataFrame([], schema)`` (and an empty pandas frame, which
+    falls back to it) is an RDD scan whose collect is one job, ~300 ms
+    warm on local[2]."""
+    row = pd.DataFrame({
+        f.name: ["" if isinstance(f.dataType, StringType) else 0]
+        for f in schema.fields})
+    return spark.createDataFrame(row, schema).limit(0)
+
+
 def empty_topk(spark: SparkSession) -> DataFrame:
-    """An empty TOPK page that collects with no Spark job: a one-row
-    Arrow local relation limited to none, which the optimizer folds into
-    an empty local table scan.  ``createDataFrame([], TOPK)`` (and an
-    empty pandas frame, which falls back to it) is an RDD scan whose
-    collect is one job, ~300 ms warm on local[2]."""
-    row = pd.DataFrame({"rank": [0], "doc_id": [0], "url": [""],
-                        "score": [0.0]})
-    return spark.createDataFrame(row, TOPK).limit(0)
+    """An empty TOPK page, the page of every zero-hit query."""
+    return empty_frame(spark, TOPK)
 
 
 def doc_id_frame(spark: SparkSession, doc_ids) -> DataFrame:
@@ -263,6 +271,16 @@ def term_in(terms):
         "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
         for t in terms)
     return F.expr(f"`term` IN ({quoted})")
+
+
+def doc_id_in(doc_ids):
+    """``F.col("doc_id").isin(doc_ids)`` built in ONE driver-to-JVM
+    call, as term_in builds its IN list: the same pushed-down
+    ``In(doc_id, ...)`` filter."""
+    ids = [int(i) for i in doc_ids]
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`doc_id` IN ({', '.join(map(str, ids))})")
 
 
 def idf_lookup_frame(dictionary: DataFrame, terms) -> DataFrame:

@@ -214,6 +214,15 @@ TOPK = StructType([
     StructField("score", DoubleType(), False),
 ])
 
+# Result of operators/topk.wand_topk_batch: TOPK rows per query_id.
+TOPK_BATCH = StructType([
+    StructField("query_id", StringType()),
+    StructField("rank", IntegerType()),
+    StructField("doc_id", LongType()),
+    StructField("url", StringType()),
+    StructField("score", DoubleType()),
+])
+
 # Result of plans/query.phrase_topk_indexed: TOPK + the phrase's
 # occurrence count in the doc.
 PHRASE_TOPK = StructType([

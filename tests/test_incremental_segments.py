@@ -61,17 +61,15 @@ def _wand(spark, f, q, k=10):
         bound_scale=f["bound_scale"]).orderBy("rank").collect()]
 
 
-def _service(spark, cat, budget=None):
-    """A QueryService from its own copy of tools/submit_query.py, with
-    that copy's LOCAL_POSTINGS_BUDGET set to ``budget`` (None: the
-    default)."""
+def _service(spark, cat):
+    """A QueryService from tools/submit_query.py.  Tests force a route
+    with monkeypatch on operators/topk.py LOCAL_POSTINGS_BUDGET (0: the
+    Spark plan for every query and workload with postings)."""
     spec = importlib.util.spec_from_file_location(
         "submit_query_segments",
         Path(__file__).resolve().parent.parent / "tools" / "submit_query.py")
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
-    if budget is not None:
-        m.LOCAL_POSTINGS_BUDGET = budget
     return m.QueryService(spark, cat)
 
 
@@ -166,37 +164,47 @@ def test_segmented_wand_matches_exhaustive_under_drift(spark, seg_env):
         assert got == want, q
 
 
-def test_segmented_batch_matches_exhaustive_under_drift(spark, seg_env):
+def test_segmented_batch_matches_exhaustive_under_drift(spark, seg_env,
+                                                        monkeypatch):
     """A one-query workload (the spec count a single query prunes at)
     through QueryService.run_batch has no segment bound scales, so it
     decodes in full: every query equals the exhaustive scorer over the
-    drifted catalog, ties included.  This fixture's drift stays within
-    the stale bounds' slack; test_index_wand.py::
-    test_workload_never_prunes_on_stale_bounds has bounds it exceeds."""
+    drifted catalog, ties included, through both wand_topk_batch routes
+    (budget 0: the Spark plan; the default: the driver).  This
+    fixture's drift stays within the stale bounds' slack;
+    test_index_wand.py::test_workload_never_prunes_on_stale_bounds has
+    bounds it exceeds."""
+    from ir_index_construction_spark.operators import topk
+
     f = _frames(spark, seg_env["cat"])
     svc = _service(spark, seg_env["cat"])
     for q in QUERIES:
         for k in (1, 10):
-            got = [(r["url"], r["score"]) for r in svc.run_batch(
-                {"q": q}, k, "wand", False).orderBy("rank").collect()]
             want = [(r["url"], r["score"]) for r in bm25_topk_exhaustive(
                 f["postings"], f["dictionary"], f["docs"], q,
                 f["n_docs"], f["avgdl"], k=k).orderBy("rank").collect()]
-            assert got == want, (q, k)
+            for budget in (0, topk.LOCAL_POSTINGS_BUDGET):
+                monkeypatch.setattr(topk, "LOCAL_POSTINGS_BUDGET", budget)
+                got = [(r["url"], r["score"]) for r in svc.run_batch(
+                    {"q": q}, k, "wand", False).orderBy("rank").collect()]
+                assert got == want, (q, k, budget)
 
 
-def test_segmented_driver_route_matches_spark_plan(spark, seg_env):
+def test_segmented_driver_route_matches_spark_plan(spark, seg_env,
+                                                  monkeypatch):
     """The service's driver route over a two-segment catalog (segment
     bound scales, per-segment dictionary delta rows) returns the rows of
     the Spark plan, also with tombstones in a base and a streamed
     segment, and launches no Spark job."""
+    from ir_index_construction_spark.operators import topk
     from ir_index_construction_spark.plans.maintenance import tombstone_urls
     from ir_index_construction_spark.schemas import TOMBSTONES
 
     cat = seg_env["cat"]
 
     def pages(budget):
-        svc = _service(spark, cat, budget)
+        monkeypatch.setattr(topk, "LOCAL_POSTINGS_BUDGET", budget)
+        svc = _service(spark, cat)
         svc._refresh()                 # snapshot load
         sc = spark.sparkContext
         sc.setJobGroup(f"segments-route-{budget}", "wand route")

@@ -10,9 +10,11 @@ from pyspark.sql import functions as F
 
 from ir_index_construction_spark.config import BM25Config, small_scale
 from ir_index_construction_spark.functions.codec import decode_chunk
+from ir_index_construction_spark.operators import topk
 from ir_index_construction_spark.operators.compress import build_compressed_index
 from ir_index_construction_spark.operators.topk import (
-    make_batch_shard_scorer, make_scorer, make_shard_scorer, wand_topk)
+    make_batch_shard_scorer, make_scorer, make_shard_scorer, wand_topk,
+    wand_topk_batch)
 from tests.conftest import QUERY_SET
 from tests.oracle import search as oracle_search
 
@@ -241,11 +243,14 @@ def _stale_bound_rows():
     ], ignore_index=True), dls
 
 
-def test_workload_never_prunes_on_stale_bounds():
+def test_workload_never_prunes_on_stale_bounds(spark, monkeypatch):
     """Block-max bounds encoded at a smaller avgdl (an older index
     segment) sit below the true scores at the current avgdl.  A single
     query prunes, so it needs the segment's bound_scale; a workload
-    carries none and must decode in full even when it holds one query."""
+    carries none and must decode in full even when it holds one query,
+    through the scorer and through both wand_topk_batch routes."""
+    from ir_index_construction_spark.schemas import INDEX
+
     built_avgdl, avgdl = STALE_BUILT_AVGDL, STALE_AVGDL
     pdf, _ = _stale_bound_rows()
     meta, terms = {"alpha": (1, 1.0), "beta": (1, 0.9)}, ["alpha", "beta"]
@@ -259,6 +264,20 @@ def test_workload_never_prunes_on_stale_bounds():
                                     BM25Config())(pdf)
     assert list(batch["doc_id"]) == [200]
     assert batch["score"].iloc[0] == scaled["score"].iloc[0]
+
+    _, dls = _stale_bound_rows()
+    index = spark.createDataFrame(pdf[INDEX.names], INDEX)
+    docs = spark.createDataFrame(
+        [(i, f"u{i}", int(dl)) for i, dl in enumerate(dls)],
+        "doc_id long, url string, doc_len int")
+    dictionary = spark.createDataFrame([("alpha", 256), ("beta", 255)],
+                                       "term string, df long")
+    pages = []
+    for _ in _batch_routes(monkeypatch):
+        pages.append([tuple(r) for r in wand_topk_batch(
+            index, dictionary, docs, {"q": "alpha beta"}, 10 ** 6, avgdl, k=1,
+            pre_parsed={"q": (terms, False)}).collect()])
+    assert pages[0] == pages[1] and [r[2] for r in pages[0]] == [200]
 
 
 def test_pruned_scorer_matches_unpruned_on_fixture(built, index_df,
@@ -288,36 +307,57 @@ def test_pruned_scorer_matches_unpruned_on_fixture(built, index_df,
     assert list(allr["doc_id"]) == [d for _, d, _, _ in expected]
 
 
-def test_batch_matches_single_query_bit_identical(built, index_df):
+BATCH_BUDGETS = (0, topk.LOCAL_POSTINGS_BUDGET)
+
+
+def _batch_routes(monkeypatch):
+    """Yield each wand_topk_batch route's budget with it set: 0 (the
+    Spark plan), then the default (every fixture workload fits: the
+    driver route)."""
+    for budget in BATCH_BUDGETS:
+        _budget(monkeypatch, budget)
+        yield budget
+
+
+def _by_qid(rows) -> dict:
+    """{query_id: [(rank, doc_id, url, score)] in rank order}."""
+    out: dict = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], r["url"], r["score"]))
+    return out
+
+
+def _single(rows) -> list:
+    return [(r["rank"], r["doc_id"], r["url"], r["score"])
+            for r in sorted(rows, key=lambda r: r["rank"])]
+
+
+def test_batch_matches_single_query_bit_identical(built, index_df,
+                                                  monkeypatch):
     """wand_topk_batch over the WHOLE fixture query set (OR, boolean,
     duplicate-term, absent-term, empty queries in one workload) — each
-    query's rows must be bit-identical to its single wand_topk() run."""
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
-
+    query's rows must be bit-identical to its single wand_topk() run,
+    through both routes."""
     queries = {f"q{i:02d}": q for i, q in enumerate(QUERY_SET)}
-    got = wand_topk_batch(index_df, built.dictionary, built.docs, queries,
-                          built.n_docs, built.avgdl, k=10).collect()
-    by_qid: dict = {}
-    for r in got:
-        by_qid.setdefault(r["query_id"], []).append(r)
-    for qid, q in queries.items():
-        single = wand_topk(index_df, built.dictionary, built.docs, q,
-                           built.n_docs, built.avgdl, k=10).collect()
-        batch = sorted(by_qid.get(qid, []), key=lambda r: r["rank"])
-        assert [(r["rank"], r["doc_id"], r["url"], r["score"])
-                for r in batch] == [
-            (r["rank"], r["doc_id"], r["url"], r["score"])
-            for r in sorted(single, key=lambda r: r["rank"])], (qid, q)
+    singles = {qid: _single(wand_topk(
+        index_df, built.dictionary, built.docs, q, built.n_docs,
+        built.avgdl, k=10).collect()) for qid, q in queries.items()}
+    for budget in _batch_routes(monkeypatch):
+        by_qid = _by_qid(wand_topk_batch(
+            index_df, built.dictionary, built.docs, queries, built.n_docs,
+            built.avgdl, k=10).collect())
+        for qid, q in queries.items():
+            assert by_qid.get(qid, []) == singles[qid], (budget, qid, q)
 
 
-def test_batch_20_query_workload_matches_single(built, index_df):
+def test_batch_20_query_workload_matches_single(built, index_df,
+                                                monkeypatch):
     """A generated 20-query workload (seeded 2-3-term samples of the
     fixture dictionary, passed pre-parsed — the bench's wand_batch100
     shape at test scale): every query's batch rows must equal its
-    single wand_topk() run."""
+    single wand_topk() run, through both routes."""
     import random
-
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
 
     terms = [r["term"] for r in
              built.dictionary.orderBy(F.col("df").desc()).limit(60)
@@ -325,50 +365,115 @@ def test_batch_20_query_workload_matches_single(built, index_df):
     rng = random.Random(11)
     pre = {f"w{i:02d}": (rng.sample(terms, rng.choice([2, 3])), False)
            for i in range(20)}
-    got = wand_topk_batch(index_df, built.dictionary, built.docs,
-                          {k: " ".join(t) for k, (t, _) in pre.items()},
-                          built.n_docs, built.avgdl, k=10,
-                          pre_parsed=pre).collect()
-    by_qid: dict = {}
-    for r in got:
-        by_qid.setdefault(r["query_id"], []).append(r)
-    for qid, (t, b) in pre.items():
-        single = wand_topk(index_df, built.dictionary, built.docs,
-                           " ".join(t), built.n_docs, built.avgdl, k=10,
-                           pre_parsed=(t, b)).collect()
-        batch = sorted(by_qid.get(qid, []), key=lambda r: r["rank"])
-        assert [(r["rank"], r["doc_id"], r["score"]) for r in batch] == [
-            (r["rank"], r["doc_id"], r["score"])
-            for r in sorted(single, key=lambda r: r["rank"])], (qid, t)
+    singles = {qid: _single(wand_topk(
+        index_df, built.dictionary, built.docs, " ".join(t), built.n_docs,
+        built.avgdl, k=10, pre_parsed=(t, b)).collect())
+        for qid, (t, b) in pre.items()}
+    for budget in _batch_routes(monkeypatch):
+        by_qid = _by_qid(wand_topk_batch(
+            index_df, built.dictionary, built.docs,
+            {k: " ".join(t) for k, (t, _) in pre.items()},
+            built.n_docs, built.avgdl, k=10, pre_parsed=pre).collect())
+        for qid, (t, _) in pre.items():
+            assert by_qid.get(qid, []) == singles[qid], (budget, qid, t)
 
 
-def test_batch_weighted_matches_single(built, index_df):
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
-
+def test_batch_weighted_matches_single(built, index_df, monkeypatch):
     queries = {"a": "machine learning", "b": "cristina lopes"}
-    got = wand_topk_batch(index_df, built.dictionary, built.docs, queries,
-                          built.n_docs, built.avgdl, k=10,
-                          weighted=True).collect()
-    for qid, q in queries.items():
-        single = wand_topk(index_df, built.dictionary, built.docs, q,
-                           built.n_docs, built.avgdl, k=10,
-                           weighted=True).collect()
-        batch = sorted([r for r in got if r["query_id"] == qid],
-                       key=lambda r: r["rank"])
-        assert [(r["doc_id"], r["score"]) for r in batch] == [
-            (r["doc_id"], r["score"])
-            for r in sorted(single, key=lambda r: r["rank"])], qid
+    singles = {qid: _single(wand_topk(
+        index_df, built.dictionary, built.docs, q, built.n_docs,
+        built.avgdl, k=10, weighted=True).collect())
+        for qid, q in queries.items()}
+    for budget in _batch_routes(monkeypatch):
+        by_qid = _by_qid(wand_topk_batch(
+            index_df, built.dictionary, built.docs, queries, built.n_docs,
+            built.avgdl, k=10, weighted=True).collect())
+        assert by_qid == singles, budget
 
 
-def test_batch_all_empty_workload(built, index_df, spark):
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
+def test_batch_all_empty_workload(built, index_df, spark, monkeypatch):
+    """A workload with no known term returns an empty frame that sorts
+    and collects with no Spark job, whatever the budget."""
+    for budget in _batch_routes(monkeypatch):
+        out = wand_topk_batch(index_df, built.dictionary, built.docs,
+                              {"x": "zzzymissing", "y": ""},
+                              built.n_docs, built.avgdl, k=10)
+        assert out.count() == 0
+        assert [f.name for f in out.schema.fields] == [
+            "query_id", "rank", "doc_id", "url", "score"]
+        assert _with_jobs(spark, out.orderBy("query_id", "rank").collect) \
+            == ([], 0), budget
 
-    out = wand_topk_batch(index_df, built.dictionary, built.docs,
-                          {"x": "zzzymissing", "y": ""},
-                          built.n_docs, built.avgdl, k=10)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "query_id", "rank", "doc_id", "url", "score"]
+
+def test_batch_driver_route_matches_spark_plan(spark, built, index_df,
+                                               monkeypatch):
+    """The whole fixture query set plus pre-parsed queries, plain and
+    weighted, with a deletion set: both wand_topk_batch routes return
+    the same rows, including the rank gap a ranked doc missing from
+    docs leaves (both routes cut ranks before the url join)."""
+    from ir_index_construction_spark.text.normalize import parse_query
+
+    queries = {f"q{i:02d}": q for i, q in enumerate(QUERY_SET)}
+    queries.update({"p0": "", "p1": ""})
+    pre = {"p0": (parse_query("machine learning")[0] + ["zzzymissing"],
+                  False),
+           "p1": (parse_query("software engineering")[0], True)}
+    top = wand_topk(index_df, built.dictionary, built.docs, "commoncrawl",
+                    built.n_docs, built.avgdl, k=2).collect()
+    dead = {r["doc_id"] for r in top}
+    gone = wand_topk(index_df, built.dictionary, built.docs,
+                     "machine learning", built.n_docs, built.avgdl, k=1,
+                     exclude_ids=dead).collect()[0]["doc_id"]
+    docs = built.docs.filter(F.col("doc_id") != gone)
+    ml = f"q{QUERY_SET.index('machine learning'):02d}"
+    cols = ("query_id", "rank", "doc_id", "url", "score")
+    for weighted in (False, True):
+        frames = []
+        for _ in _batch_routes(monkeypatch):
+            frames.append(sorted(tuple(r) for r in wand_topk_batch(
+                index_df, built.dictionary, docs, queries, built.n_docs,
+                built.avgdl, k=10, weighted=weighted, pre_parsed=pre,
+                exclude_ids=dead).collect()))
+        assert frames[0] == frames[1], weighted
+        by_qid = _by_qid(dict(zip(cols, r)) for r in frames[0])
+        assert by_qid["p0"] and by_qid["p1"]
+        assert not dead & {r[2] for r in frames[0]}
+        if not weighted:               # `gone` was machine learning's #1
+            assert [r[0] for r in by_qid[ml]] == list(range(2, 11))
+
+
+def test_batch_route_budget_boundary(spark, built, wand_catalog,
+                                    monkeypatch):
+    """A workload routes by its union of terms' postings: at exactly the
+    budget it runs 3 jobs over catalog tables (idf lookup, index rows,
+    urls) and returns a local table scan; one posting over, 1 job (idf
+    lookup) and a plan with the shard scorer's pandas UDF.  Both give
+    the same rows."""
+    from ir_index_construction_spark.text.normalize import parse_query
+
+    index, dictionary, docs = (wand_catalog.read(spark, t)
+                               for t in ("index", "dictionary", "docs"))
+
+    queries = {"a": "machine learning", "b": "cristina lopes",
+               "c": "software AND engineering"}
+    terms = {t for q in queries.values() for t in parse_query(q)[0]}
+    postings = sum(r["df"] for r in built.dictionary.collect()
+                   if r["term"] in terms)
+
+    def run(budget):
+        _budget(monkeypatch, budget)
+        out, jobs = _with_jobs(spark, lambda: wand_topk_batch(
+            index, dictionary, docs, queries, built.n_docs, built.avgdl,
+            k=10))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in out.collect()), jobs, plan
+
+    got, jobs, plan = run(postings)
+    want, plan_jobs, spark_plan = run(postings - 1)
+    assert "LocalTableScan" in plan and "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapGroupsInPandas" in spark_plan
+    assert (jobs, plan_jobs) == (3, 1)
+    assert got == want and got
 
 
 def test_idf_cache_skips_lookup_and_matches(built, index_df, spark):
@@ -473,8 +578,6 @@ def test_wand_exclude_ids_backfills_and_preserves_scores(built, index_df):
     deep unexcluded run.  Exercises OR, duplicate-term, and boolean
     queries, so both the pruned (seed-threshold) and AND paths must
     respect the deletion set before per-shard top-k selection."""
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
-
     queries = ["machine learning", "learning machine learning",
                "machine AND learning", "commoncrawl"]
     for q in queries:
@@ -502,7 +605,7 @@ def test_wand_exclude_ids_backfills_and_preserves_scores(built, index_df):
             == [(r["doc_id"], r["score"]) for r in got], q
 
 
-def test_query_service_applies_tombstones(spark, tmp_path):
+def test_query_service_applies_tombstones(spark, tmp_path, monkeypatch):
     """A tombstone commit behind the running service must take effect on
     the next query (snapshot advance reloads the deletion set), and the
     purge that clears tombstones must restore nothing deleted."""
@@ -545,11 +648,12 @@ def test_query_service_applies_tombstones(spark, tmp_path):
     # the survivor's score is unchanged by the deletion (same stats)
     assert r2[0]["score"] == r1[1]["score"]
 
-    # the batch route serves the same deletion set
-    b2 = svc.run_batch({"q0": "foo"}, 10, "wand", False).collect()
-    assert [(r["query_id"], r["rank"], r["doc_id"]) for r in b2] == [
-        ("q0", 1, 2)]
-    assert b2[0]["score"] == r1[1]["score"]
+    # run_batch serves the same deletion set, through both routes
+    for budget in _batch_routes(monkeypatch):
+        b2 = svc.run_batch({"q0": "foo"}, 10, "wand", False).collect()
+        assert [(r["query_id"], r["rank"], r["doc_id"]) for r in b2] == [
+            ("q0", 1, 2)], budget
+        assert b2[0]["score"] == r1[1]["score"]
 
     assert purge_tombstones(spark, cat) == 1
     r3 = svc.run("foo", 10, "exhaustive", False).orderBy("rank").collect()
@@ -1649,14 +1753,16 @@ def _service_module():
     return m
 
 
-def _service(spark, cat, budget=None):
-    """A QueryService from its own copy of tools/submit_query.py, with
-    that copy's LOCAL_POSTINGS_BUDGET set to ``budget`` (None: the
-    default): 0 forces every query with postings onto the Spark plan."""
-    m = _service_module()
-    if budget is not None:
-        m.LOCAL_POSTINGS_BUDGET = budget
-    return m.QueryService(spark, cat)
+def _service(spark, cat):
+    """A QueryService from tools/submit_query.py."""
+    return _service_module().QueryService(spark, cat)
+
+
+def _budget(monkeypatch, budget):
+    """Set operators/topk.py LOCAL_POSTINGS_BUDGET for the rest of the
+    test: 0 forces every query and workload with postings onto its
+    Spark plan."""
+    monkeypatch.setattr(topk, "LOCAL_POSTINGS_BUDGET", budget)
 
 
 def _with_jobs(spark, fn):
@@ -1694,16 +1800,17 @@ def wand_catalog(spark, built, index_df, tmp_path_factory):
     return cat
 
 
-def _routes_agree(spark, cat, cases):
+def _routes_agree(spark, cat, cases, monkeypatch):
     """Every (query, run kwargs) gives the same rows with the Spark plan
     forced (budget 0) and with every query in budget; every driver
     page, empty ones included, launches no Spark job.  Returns the
     pages."""
-    plan = _service(spark, cat, 0)
-    local = _service(spark, cat, 10 ** 12)
+    plan, local = _service(spark, cat), _service(spark, cat)
     pages = []
     for q, kw in cases:
+        _budget(monkeypatch, 0)
         want = _page(plan, q, **kw)
+        _budget(monkeypatch, 10 ** 12)
         got, jobs = _with_jobs(spark, lambda: _page(local, q, **kw))
         assert got == want, (q, kw)
         assert jobs == 0, (q, kw, jobs)
@@ -1711,7 +1818,7 @@ def _routes_agree(spark, cat, cases):
     return pages
 
 
-def test_driver_route_matches_spark_plan(spark, wand_catalog):
+def test_driver_route_matches_spark_plan(spark, wand_catalog, monkeypatch):
     """OR, AND (one with a missing term), all-absent and stopword-only
     queries, weighted, search-after and boosts: both routes return
     identical (rank, doc_id, url, score) rows.  (A query with no
@@ -1720,19 +1827,22 @@ def test_driver_route_matches_spark_plan(spark, wand_catalog):
     cases += [(q, {"weighted": True}) for q in QUERY_SET]
     cases += [("machine^2.5 learning", {}), ("software^0.5 AND engineering",
                                              {"k": 5})]
-    pages = _routes_agree(spark, wand_catalog, cases)
+    pages = _routes_agree(spark, wand_catalog, cases, monkeypatch)
     assert sum(1 for p in pages if p) >= 10
     assert not pages[QUERY_SET.index("machine AND zzzymissing")]
     # search-after: the next page after the 3rd row of a deep page
-    deep = _page(_service(spark, wand_catalog, 0), "machine learning", k=30)
+    _budget(monkeypatch, 0)
+    deep = _page(_service(spark, wand_catalog), "machine learning", k=30)
     _, d, _, s = deep[2]
     after = _routes_agree(spark, wand_catalog, [
         ("machine learning", {"after": (s, d)}),
-        ("machine learning", {"after": (s, d), "weighted": True})])
+        ("machine learning", {"after": (s, d), "weighted": True})],
+        monkeypatch)
     assert [r[1] for r in after[0]] == [r[1] for r in deep[3:13]]
 
 
-def test_driver_route_applies_tombstones(spark, built, index_df, tmp_path):
+def test_driver_route_applies_tombstones(spark, built, index_df, tmp_path,
+                                        monkeypatch):
     """Tombstoned docs are dropped by both routes alike (the top docs of
     the undeleted result are deleted, so backfill is exercised)."""
     from ir_index_construction_spark.plans.maintenance import tombstone_urls
@@ -1747,15 +1857,17 @@ def test_driver_route_applies_tombstones(spark, built, index_df, tmp_path):
         [(built.n_docs, built.avgdl, 1)],
         "n_docs long, avgdl double, n_terms long"), "stats")
     txn.commit()
-    top = _page(_service(spark, cat, 0), "machine learning")
+    _budget(monkeypatch, 0)
+    top = _page(_service(spark, cat), "machine learning")
     assert tombstone_urls(spark, cat, [r[2] for r in top[:3]]) == 3
     pages = _routes_agree(spark, cat, [
         ("machine learning", {}), ("machine AND learning", {}),
-        ("learning machine learning", {"weighted": True})])
+        ("learning machine learning", {"weighted": True})], monkeypatch)
     assert [r[1] for r in pages[0]][:7] == [r[1] for r in top[3:]]
 
 
-def test_driver_route_budget_boundary(spark, built, wand_catalog):
+def test_driver_route_budget_boundary(spark, built, wand_catalog,
+                                     monkeypatch):
     """Routing is by the query's postings: a query whose summed df fits
     the budget runs no Spark job; one posting over, it runs the Spark
     plan; both return the same rows."""
@@ -1765,17 +1877,18 @@ def test_driver_route_budget_boundary(spark, built, wand_catalog):
     terms = set(parse_query(q)[0])
     postings = sum(r["df"] for r in built.dictionary.collect()
                    if r["term"] in terms)
-    fits = _service(spark, wand_catalog, postings)
-    over = _service(spark, wand_catalog, postings - 1)
-    for svc in (fits, over):
-        _page(svc, q)                  # load the snapshot, warm the idf
-    got, jobs = _with_jobs(spark, lambda: _page(fits, q))
-    want, plan_jobs = _with_jobs(spark, lambda: _page(over, q))
+    svc = _service(spark, wand_catalog)
+    _page(svc, q)                      # load the snapshot, warm the idf
+    _budget(monkeypatch, postings)
+    got, jobs = _with_jobs(spark, lambda: _page(svc, q))
+    _budget(monkeypatch, postings - 1)
+    want, plan_jobs = _with_jobs(spark, lambda: _page(svc, q))
     assert jobs == 0 and plan_jobs > 0
     assert got == want and got
 
 
-def test_driver_route_sees_commit_behind_service(spark, tmp_path):
+def test_driver_route_sees_commit_behind_service(spark, tmp_path,
+                                                monkeypatch):
     """A commit made behind the running service is served by the next
     driver-route query: its snapshot's files, stats and idf, never a
     mix of the old and new commit."""
@@ -1809,7 +1922,8 @@ def test_driver_route_sees_commit_behind_service(spark, tmp_path):
            [(1, "u1", 4), (2, "u2", 4), (3, "u3", 4)])
     got, jobs = _with_jobs(spark, lambda: _page(svc, "foo"))
     assert [r[2] for r in got] == ["u2", "u1"] and jobs == 0
-    assert got == _page(_service(spark, cat, 0), "foo")
+    _budget(monkeypatch, 0)
+    assert got == _page(_service(spark, cat), "foo")
     assert got[1][3] > first[0][3]        # n_docs 1 -> 3 raised the idf
 
 
@@ -1857,7 +1971,8 @@ def test_empty_page_launches_no_job(spark):
     assert _with_jobs(spark, page.collect) == ([], 0)
 
 
-def test_driver_route_scales_stale_segment_bounds(spark, tmp_path):
+def test_driver_route_scales_stale_segment_bounds(spark, tmp_path,
+                                                 monkeypatch):
     """The service hands the driver route its segments' bound scales: on
     a segment whose block-max bounds are stale, both routes return the
     winner that unscaled pruning would cut."""
@@ -1891,5 +2006,6 @@ def test_driver_route_scales_stale_segment_bounds(spark, tmp_path):
     unscaled = make_shard_scorer(meta, ["alpha", "beta"], 1, False,
                                  STALE_AVGDL, BM25Config())(rows)
     assert list(unscaled["doc_id"]) == [50]        # the fixture bites
-    pages = _routes_agree(spark, cat, [("alpha beta^0.9", {"k": 1})])
+    pages = _routes_agree(spark, cat, [("alpha beta^0.9", {"k": 1})],
+                          monkeypatch)
     assert [r[1] for r in pages[0]] == [200]

@@ -438,14 +438,21 @@ def main():
         ],
     )
 
-    from ir_index_construction_spark.operators.topk import wand_topk_batch
+    from ir_index_construction_spark.operators import topk
 
+    workload = {"a": "machine learning", "b": "cristina lopes",
+                "c": "software AND 2024"}
+    # budget 0: every workload with postings takes the Spark plan
+    default_budget, topk.LOCAL_POSTINGS_BUDGET = topk.LOCAL_POSTINGS_BUDGET, 0
+    try:
+        batch_plan = topk.wand_topk_batch(index_pq, dictionary, docs, workload,
+                                          built.n_docs, built.avgdl, k=10)
+    finally:
+        topk.LOCAL_POSTINGS_BUDGET = default_budget
     section(
-        "batch WAND — whole query workload in one job",
-        wand_topk_batch(index_pq, dictionary, docs,
-                        {"a": "machine learning", "b": "cristina lopes",
-                         "c": "software AND 2024"},
-                        built.n_docs, built.avgdl, k=10),
+        "batch WAND, Spark plan (over the driver-route budget) — whole"
+        " query workload in one plan",
+        batch_plan,
         [
             ("union-term filter pushed to index scan",
              lambda p: "PushedFilters" in p and "In(term" in p),
@@ -454,6 +461,22 @@ def main():
              lambda p: "hashpartitioning(query_id" in p),
             ("url back-join is broadcast",
              lambda p: "BroadcastHashJoin" in p),
+        ],
+    )
+
+    section(
+        "batch WAND, driver route (union postings in budget) — rows"
+        " scored on the driver, returned as one local partition",
+        topk.wand_topk_batch(index_pq, dictionary, docs, workload,
+                             built.n_docs, built.avgdl, k=10),
+        [
+            ("rows come back as a local table scan",
+             lambda p: "LocalTableScan" in p),
+            ("no Exchange: nothing shuffled",
+             lambda p: "Exchange" not in p),
+            ("no pandas UDF: scored before the plan",
+             lambda p: "FlatMapGroupsInPandas" not in p
+             and "ArrowEvalPython" not in p),
         ],
     )
 

@@ -1,18 +1,25 @@
-"""Time QueryService's two WAND routes against a query's postings.
+"""Time the two WAND routes against a query's or a workload's postings.
 
-A plain WAND query whose terms hold at most LOCAL_POSTINGS_BUDGET
-postings (summed df) is scored on the driver (wand_topk_driver, no
-Spark job); a larger one runs wand_topk's Spark plan.  This tool
-measures where the two routes cross.  It builds a synthetic catalog of
---docs docs whose terms have fixed document frequencies (100% of docs
-for ta/ua/ub/uc, then 30%, 10%, 3%, 1%, 0.3% and 0.1% for tb..tg), then
-runs each query through one QueryService with the budget at 0 (the
-Spark plan) and unbounded (the driver route): one warm-up run and
---reps timed runs per route.  One line per query: its postings, each
-route's median latency and Spark job count, and whether the two pages
-are identical.
+A plain WAND query whose terms hold at most operators/topk.py
+LOCAL_POSTINGS_BUDGET postings (summed df) is scored on the driver
+(wand_topk_driver, no Spark job); a larger one runs wand_topk's Spark
+plan.  wand_topk_batch routes a workload the same way by the postings
+of its union of terms.  This tool measures where the routes cross.  It
+builds a synthetic catalog of --docs docs whose terms have fixed
+document frequencies (100% of docs for ta/ua/ub/uc, then 30%, 10%, 3%,
+1%, 0.3% and 0.1% for tb..tg), then runs each query through one
+QueryService with the budget at 0 (the Spark plan) and unbounded (the
+driver route): one warm-up run and --reps timed runs per route.  One
+line per query: its postings, each route's median latency and Spark
+job count, and whether the two routes' rows are identical.
+
+With --batch N each query becomes a workload of N queries run through
+QueryService.run_batch (as ``submit_query.py --batch`` runs it, sorted
+and collected): the query itself, then seeded samples of 1 to all of
+its terms, so the workload's union of terms is the query's.
 
     python tools/route_crossover.py --docs 1000000 --out /tmp/crossover
+    python tools/route_crossover.py --batch 100 --reps 3 --out /tmp/crossover
 
 The catalog is kept in --out and reused when it is already there.
 """
@@ -21,6 +28,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import random
 import statistics
 import sys
 import time
@@ -30,6 +38,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import submit_query  # noqa: E402  (tools/ is this script's directory)
+from ir_index_construction_spark.operators import topk  # noqa: E402
 
 # term -> share of docs holding it (xxhash64-chosen, tf 1-5)
 DF_SHARE = {"ua": 1.0, "ub": 1.0, "uc": 1.0, "ta": 1.0, "tb": 0.3,
@@ -82,11 +91,20 @@ def build_catalog(spark, root: str, n_docs: int, shard_size: int):
     return cat
 
 
-def timed(spark, svc, query: str, budget: int, reps: int):
-    """(median seconds, Spark jobs of the last run, page rows) of
-    ``reps`` warm runs of ``query`` at driver-route budget ``budget``."""
-    submit_query.LOCAL_POSTINGS_BUDGET = budget
-    svc.run(query, 10, "wand", False).collect()
+def workload(query: str, n: int, seed: int = 0) -> dict:
+    """``n`` queries over ``query``'s terms: the query itself, then
+    seeded samples of 1 to all of its terms."""
+    terms = query.split()
+    rng = random.Random(seed)
+    return {f"b{i:05d}": query if i == 0 else " ".join(
+        rng.sample(terms, rng.randint(1, len(terms)))) for i in range(n)}
+
+
+def timed(spark, call, budget: int, reps: int):
+    """(median seconds, Spark jobs of the last run, rows) of ``reps``
+    warm runs of ``call`` at driver-route budget ``budget``."""
+    topk.LOCAL_POSTINGS_BUDGET = budget
+    call()
     sc = spark.sparkContext
     walls = []
     for _ in range(reps):
@@ -94,7 +112,7 @@ def timed(spark, svc, query: str, budget: int, reps: int):
         sc.setJobGroup(group, group)
         try:
             t0 = time.perf_counter()
-            rows = svc.run(query, 10, "wand", False).collect()
+            rows = call()
             walls.append(time.perf_counter() - t0)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -110,6 +128,9 @@ def main():
     ap.add_argument("--cpus", type=int, default=2)
     ap.add_argument("--queries", default=QUERIES,
                     help="'|'-separated queries over the synthetic terms")
+    ap.add_argument("--batch", type=int, default=0, metavar="N",
+                    help="time each query as a workload of N queries "
+                         "over its terms (wand_topk_batch's routes)")
     ap.add_argument("--out", required=True,
                     help="catalog directory (built if absent)")
     args = ap.parse_args()
@@ -127,12 +148,18 @@ def main():
     n_docs = cat.read_rows("stats")[0]["n_docs"]
     print(f"catalog {args.out}: {n_docs} docs, shard size {args.shard_size},"
           f" local[{args.cpus}], default budget "
-          f"{submit_query.LOCAL_POSTINGS_BUDGET}", flush=True)
+          f"{topk.LOCAL_POSTINGS_BUDGET}", flush=True)
     svc = submit_query.QueryService(spark, cat)
     for q in args.queries.split("|"):
         postings = sum(df.get(t, 0) for t in set(parse_query(q)[0]))
-        spark_s, spark_jobs, want = timed(spark, svc, q, 0, args.reps)
-        driver_s, driver_jobs, got = timed(spark, svc, q, 1 << 62, args.reps)
+        if args.batch:
+            queries = workload(q, args.batch)
+            call = lambda: svc.run_batch(queries, 10, "wand", False) \
+                .orderBy("query_id", "rank").collect()
+        else:
+            call = lambda: svc.run(q, 10, "wand", False).collect()
+        spark_s, spark_jobs, want = timed(spark, call, 0, args.reps)
+        driver_s, driver_jobs, got = timed(spark, call, 1 << 62, args.reps)
         print(f"{q:14s} postings={postings:9d}  "
               f"spark_ms={spark_s * 1e3:8.1f} ({spark_jobs} jobs)  "
               f"driver_ms={driver_s * 1e3:8.1f} ({driver_jobs} jobs)  "

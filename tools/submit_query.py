@@ -11,8 +11,10 @@ the ranked URLs and the elapsed milliseconds until an empty line quits).
         [--scorer bm25|lm] [--rescore N] [--termvectors DOC_ID]
         [--batch queries.txt]
 
---batch FILE evaluates every line of FILE as one query in a SINGLE
-Spark job (operators/topk.py wand_topk_batch) and prints per-query
+--batch FILE evaluates every line of FILE as one query workload
+(operators/topk.py wand_topk_batch: one index scan for the union of
+its terms, scored on the driver when that union's postings fit the
+driver-route budget, else as one Spark plan) and prints per-query
 blocks — the shape for scoring a mined query set against the corpus.
 
 Query surfaces (each also selected by syntax where noted): exact
@@ -96,18 +98,6 @@ def _half_life(v):
     return fv
 
 
-# Driver-route budget, read on every query: a plain WAND query whose
-# terms hold at most this many postings (summed df) is scored on the
-# driver with no Spark job; above it the query runs wand_topk's Spark
-# plan.  tools/route_crossover.py times both routes against a query's
-# postings on a synthetic 1M-doc catalog: at local[2] on a 4-vCPU VM
-# the driver takes under half the Spark plan's time up to 1M postings
-# and stays ahead to ~4M (README.md has the figures).  The benchmark's
-# catalogs hold under 600 docs, so every benchmark query is in budget
-# and the benchmark times only the driver route.
-LOCAL_POSTINGS_BUDGET = 1_000_000
-
-
 class QueryService:
     """Steady-state query service: loads stats/docs/dictionary/index
     frames ONCE per catalog snapshot (round-2 ADVICE: the REPL used to
@@ -120,13 +110,14 @@ class QueryService:
 
     Plain ``wand`` queries route by cost.  After the idf lookup (read on
     the driver from the snapshot's dictionary files), a query whose
-    terms hold at most ``LOCAL_POSTINGS_BUDGET`` postings is scored on
-    the driver (operators/topk.py wand_topk_driver: pyarrow reads of the
-    snapshot's index and docs files, the same shard scorer, no Spark
+    terms hold at most operators/topk.py ``LOCAL_POSTINGS_BUDGET``
+    postings is scored on the driver (wand_topk_driver: pyarrow reads of
+    the snapshot's index and docs files, the same shard scorer, no Spark
     job); a larger one runs wand_topk's Spark plan.  A query with no
     postings (no known term, an AND missing a term) gets its empty page
-    on the driver whatever the budget.  Every other mode runs its Spark
-    plan."""
+    on the driver whatever the budget.  A ``run_batch`` workload routes
+    the same way inside wand_topk_batch, by its union of terms.  Every
+    other mode runs its Spark plan."""
 
     def __init__(self, spark, cat):
         from ir_index_construction_spark.plans.query import TermStatsCache
@@ -216,6 +207,7 @@ class QueryService:
             recency_origin: str = "2025-01-01"):
         from pyspark.sql import functions as F
 
+        from ir_index_construction_spark.operators import topk
         from ir_index_construction_spark.operators.topk import (
             wand_topk, wand_topk_driver)
         from ir_index_construction_spark.plans.query import (
@@ -531,7 +523,7 @@ class QueryService:
             if f["local"] is not None:
                 page = wand_topk_driver(
                     self.spark, f["local"], query, f["n_docs"], f["avgdl"],
-                    LOCAL_POSTINGS_BUDGET, **kw)
+                    topk.LOCAL_POSTINGS_BUDGET, **kw)
                 if page is not None:
                     return page
             return wand_topk(f["index"], f["dictionary"], f["docs"],
@@ -546,7 +538,7 @@ class QueryService:
                                     doc_filter=doc_filter)
 
     def run_batch(self, queries: dict, k: int, mode: str, weighted: bool):
-        """Evaluate a query workload {query_id: text} in one plan over
+        """Evaluate a query workload {query_id: text} over
         the current snapshot, tombstoned docs excluded as in run().
         Mode "phrase" runs phrase_topk_batch (quotes optional), any
         other mode wand_topk_batch.  Returns (query_id, rank, doc_id,
@@ -715,8 +707,10 @@ def main():
                          "doc_id of the last row of the previous page "
                          "(stateless deep paging; wand/exhaustive modes)")
     ap.add_argument("--batch", default=None, metavar="FILE",
-                    help="file with one query per line, all evaluated in "
-                         "a single Spark job (wand_topk_batch)")
+                    help="file with one query per line, all evaluated as "
+                         "one workload (wand_topk_batch: scored on the "
+                         "driver when the union of its terms fits the "
+                         "driver-route budget, else one Spark plan)")
     ap.add_argument("--filter", action="append", default=None,
                     metavar="KEY=VALUE", dest="meta_filter",
                     help="metadata-filtered search over the catalog's "
